@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from sparklink.preprocess import tokens
+from sparklink.session import session_expr
 from sparklink.util import widen_to_parallelism
 
 # --------------------------------------------------------------------------
@@ -154,8 +155,12 @@ def build_blocking_map(records: DataFrame, predicates: list[Predicate], id_col: 
     per row (array_distinct in block_keys_column) rather than with a
     global dropDuplicates — one less full shuffle of the map, identical
     relation."""
+    preds = tuple(predicates)
     return records.select(
-        F.col(id_col).alias("record_id"), F.explode(block_keys_column(predicates)).alias("block_key")
+        *session_expr(
+            ("blocking_map", preds, id_col),
+            lambda: [F.col(id_col).alias("record_id"), F.explode(block_keys_column(preds)).alias("block_key")],
+        )
     )
 
 
@@ -206,14 +211,24 @@ def token_stats(records: DataFrame, column: str, id_col: str = "conv_id") -> tup
     pipeline's conv_text happens to be lowered by clean_text, which masked
     this for other callers). Idempotent on already-lowered input."""
     recs = widen_to_parallelism(records)
-    toks = recs.select(F.col(id_col).alias("record_id"), tokens(F.lower(F.col(column))).alias("toks"))
-    tf = (
-        toks.select("record_id", F.explode("toks").alias("token"))
-        .groupBy("record_id", "token")
-        .agg(F.count("*").alias("tf"))
+    tok_cols, token, tf_count, df_count = session_expr(
+        ("token_stats", column, id_col), lambda: _token_columns(column, id_col)
     )
-    dfreq = tf.groupBy("token").agg(F.count("*").alias("df"))
+    toks = recs.select(*tok_cols)
+    tf = toks.select(F.col("record_id"), token).groupBy("record_id", "token").agg(tf_count)
+    dfreq = tf.groupBy("token").agg(df_count)
     return toks, tf, dfreq
+
+
+def _token_columns(column: str, id_col: str) -> tuple[list[Column], Column, Column, Column]:
+    """(token-array projection, token explode, tf count, df count) of
+    token_stats and partitioned_token_stats."""
+    return (
+        [F.col(id_col).alias("record_id"), tokens(F.lower(F.col(column))).alias("toks")],
+        F.explode("toks").alias("token"),
+        F.count("*").alias("tf"),
+        F.count("*").alias("df"),
+    )
 
 
 def partitioned_token_stats(
@@ -233,13 +248,14 @@ def partitioned_token_stats(
     unknown partitioning, and consumers planned against it would
     re-insert the exchanges. Callers own unpersisting both frames.
     """
-    toks = records.select(
-        F.col(id_col).alias("record_id"), tokens(F.lower(F.col(column))).alias("toks")
-    ).repartition("record_id")
+    tok_cols, token, tf_count, _ = session_expr(
+        ("token_stats", column, id_col), lambda: _token_columns(column, id_col)
+    )
+    toks = records.select(*tok_cols).repartition("record_id")
     toks = toks.persist()
     toks.count()
-    ex = toks.select("record_id", F.explode("toks").alias("token"))
-    tf = ex.groupBy("record_id", "token").agg(F.count("*").alias("tf"))
+    ex = toks.select(F.col("record_id"), token)
+    tf = ex.groupBy("record_id", "token").agg(tf_count)
     tf = tf.persist()
     tf.count()
     return toks, tf
@@ -258,11 +274,8 @@ def record_token_vocab(tf: DataFrame, dfreq: DataFrame) -> DataFrame:
     share one exchange). Selection and weights are bit-identical: the
     array comparators replicate the windows' (w desc, token asc) order.
     """
-    return (
-        tf.join(F.broadcast(dfreq), "token")
-        .groupBy("record_id")
-        .agg(F.collect_list(F.struct("token", "tf", "df")).alias("vocab"))
-    )
+    vocab = session_expr(("token_vocab",), lambda: F.collect_list(F.struct("token", "tf", "df")).alias("vocab"))
+    return tf.join(F.broadcast(dfreq), "token").groupBy("record_id").agg(vocab)
 
 
 def tfidf_canopy_keys_from_vocab(
@@ -460,9 +473,10 @@ def cap_block_sizes(blocking_map: DataFrame, max_block_size: int = 200) -> DataF
     map-side so a degenerate hot key never ships its rows to one task,
     whereas a window would shuffle the entire hot block to a single
     partition — the exact skew this cap exists to remove."""
-    oversized = (
-        blocking_map.groupBy("block_key").agg(F.count("*").alias("n")).filter(F.col("n") > max_block_size).select("block_key")
+    n, too_big = session_expr(
+        ("block_cap", max_block_size), lambda: (F.count("*").alias("n"), F.col("n") > max_block_size)
     )
+    oversized = blocking_map.groupBy("block_key").agg(n).filter(too_big).select("block_key")
     return blocking_map.join(F.broadcast(oversized), "block_key", "left_anti")
 
 

@@ -20,12 +20,24 @@ is bounded by conversation length, not corpus size.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from sparklink.preprocess import clean_text, tokens
+from sparklink.session import session_expr
 
 TRANSCRIPT_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+
+
+def _dedup_filter() -> tuple[Column, Column]:
+    """(row-number column, survivor filter) of :func:`dedup_turns`."""
+    w = Window.partitionBy("conv_id", "turn_idx").orderBy(
+        F.col("ts").asc_nulls_last(),
+        F.col("text"),
+        F.col("role").asc_nulls_last(),
+        F.col("tool").asc_nulls_last(),
+    )
+    return F.row_number().over(w), F.col("_rn") == 1
 
 
 def dedup_turns(transcripts: DataFrame) -> DataFrame:
@@ -34,15 +46,49 @@ def dedup_turns(transcripts: DataFrame) -> DataFrame:
     order over the payload — collisions tying on (ts, text) but differing
     in role/tool would otherwise be broken by partition arrival order,
     i.e. nondeterministically across runs and cluster layouts."""
-    w = Window.partitionBy("conv_id", "turn_idx").orderBy(
-        F.col("ts").asc_nulls_last(),
-        F.col("text"),
-        F.col("role").asc_nulls_last(),
-        F.col("tool").asc_nulls_last(),
+    rn, keep = session_expr(("dedup_turns",), _dedup_filter)
+    return transcripts.withColumn("_rn", rn).filter(keep).drop("_rn")
+
+
+def _canonical_columns(extra_cols: tuple[str, ...]) -> tuple[list[Column], list[Column], Column]:
+    """(aggregates, projection, n_tokens) of :func:`canonicalize`."""
+    turn = F.struct(
+        F.col("turn_idx"),
+        F.col("role"),
+        clean_text(F.col("text")).alias("text"),
+        F.col("tool"),
+        F.col("ts"),
     )
-    return (
-        transcripts.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
-    )
+    agg = [
+        F.array_sort(F.collect_list(turn)).alias("turns"),
+        F.min("ts").alias("first_ts"),
+        (F.unix_timestamp(F.max("ts")) - F.unix_timestamp(F.min("ts"))).cast("long").alias("duration_s"),
+    ]
+    for c in extra_cols:
+        agg.append(F.min(c).alias(c))
+    txt = lambda t: t["text"]  # noqa: E731
+    projection = [
+        F.col("conv_id"),
+        F.size("turns").alias("n_turns"),
+        F.array_join(F.transform("turns", txt), " ").alias("conv_text"),
+        F.array_join(
+            F.transform(F.filter("turns", lambda t: t["role"] == "user"), txt), " "
+        ).alias("user_text"),
+        F.element_at(F.transform(F.filter("turns", lambda t: t["role"] == "user"), txt), 1).alias(
+            "first_user_text"
+        ),
+        F.element_at(
+            F.transform(F.filter("turns", lambda t: t["role"] == "assistant"), txt), -1
+        ).alias("last_assistant_text"),
+        F.array_sort(
+            F.array_distinct(F.filter(F.transform("turns", lambda t: t["tool"]), lambda x: x.isNotNull()))
+        ).alias("tools"),
+        F.transform("turns", txt).alias("turn_texts"),
+        F.col("first_ts"),
+        F.col("duration_s"),
+        *[F.col(c) for c in extra_cols],
+    ]
+    return agg, projection, F.size(tokens(F.col("conv_text")))
 
 
 def canonicalize(transcripts: DataFrame, extra_cols: list[str] | None = None) -> DataFrame:
@@ -63,43 +109,9 @@ def canonicalize(transcripts: DataFrame, extra_cols: list[str] | None = None) ->
     (dedup_turns' tie-break is total over TRANSCRIPT_COLS only), so
     min() over the survivor set can vary run to run in that edge case.
     """
-    turn = F.struct(
-        F.col("turn_idx"),
-        F.col("role"),
-        clean_text(F.col("text")).alias("text"),
-        F.col("tool"),
-        F.col("ts"),
-    )
-    agg = [
-        F.array_sort(F.collect_list(turn)).alias("turns"),
-        F.min("ts").alias("first_ts"),
-        (F.unix_timestamp(F.max("ts")) - F.unix_timestamp(F.min("ts"))).cast("long").alias("duration_s"),
-    ]
-    for c in extra_cols or []:
-        agg.append(F.min(c).alias(c))
+    extra = tuple(extra_cols or ())
+    agg, projection, n_tokens = session_expr(("canonicalize", extra), lambda: _canonical_columns(extra))
     # single-exchange contract (module docstring): hash(conv_id) serves both
     # the dedup window's (conv_id, turn_idx) clustering and the groupBy
     g = dedup_turns(transcripts.repartition("conv_id")).groupBy("conv_id").agg(*agg)
-    txt = lambda t: t["text"]  # noqa: E731
-    out = g.select(
-        "conv_id",
-        F.size("turns").alias("n_turns"),
-        F.array_join(F.transform("turns", txt), " ").alias("conv_text"),
-        F.array_join(
-            F.transform(F.filter("turns", lambda t: t["role"] == "user"), txt), " "
-        ).alias("user_text"),
-        F.element_at(F.transform(F.filter("turns", lambda t: t["role"] == "user"), txt), 1).alias(
-            "first_user_text"
-        ),
-        F.element_at(
-            F.transform(F.filter("turns", lambda t: t["role"] == "assistant"), txt), -1
-        ).alias("last_assistant_text"),
-        F.array_sort(
-            F.array_distinct(F.filter(F.transform("turns", lambda t: t["tool"]), lambda x: x.isNotNull()))
-        ).alias("tools"),
-        F.transform("turns", txt).alias("turn_texts"),
-        "first_ts",
-        "duration_s",
-        *[F.col(c) for c in (extra_cols or [])],
-    )
-    return out.withColumn("n_tokens", F.size(tokens(F.col("conv_text"))))
+    return g.select(*projection).withColumn("n_tokens", n_tokens)

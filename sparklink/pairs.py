@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sparklink.session import session_expr
+
 
 def candidate_pairs(blocking_map: DataFrame, pair_slice: tuple[int, int] | None = None) -> DataFrame:
     """(block_key, record_id) self-join -> distinct (id_a, id_b), id_a < id_b.
@@ -48,18 +50,26 @@ def candidate_pairs_cross(bm_left: DataFrame, bm_right: DataFrame) -> DataFrame:
     return l.join(r, "block_key").select("id_a", "id_b").dropDuplicates(["id_a", "id_b"])
 
 
+def _side(records: DataFrame, fields: list[str], id_col: str, side: str) -> DataFrame:
+    """records -> (id_<side>, <field>_<side>...), the projection built once
+    per session (session.session_expr)."""
+    key = ("hydrate_side", tuple(fields), id_col, side)
+    cols = session_expr(
+        key, lambda: [F.col(id_col).alias(f"id_{side}"), *[F.col(f).alias(f"{f}_{side}") for f in fields]]
+    )
+    return records.select(*cols)
+
+
 def hydrate(pairs: DataFrame, records: DataFrame, fields: list[str], id_col: str = "conv_id") -> DataFrame:
     """Join field payloads for both sides (the reference's double hydration
     join, mysql_example/mysql_example.py:261-262). Only requested fields are
     selected pre-join so parquet column pruning survives."""
-    a = records.select(F.col(id_col).alias("id_a"), *[F.col(f).alias(f + "_a") for f in fields])
-    b = records.select(F.col(id_col).alias("id_b"), *[F.col(f).alias(f + "_b") for f in fields])
-    return pairs.join(a, "id_a").join(b, "id_b")
+    return hydrate_two(pairs, records, records, fields, id_col)
 
 
 def hydrate_two(
     pairs: DataFrame, left: DataFrame, right: DataFrame, fields: list[str], id_col: str = "conv_id"
 ) -> DataFrame:
-    a = left.select(F.col(id_col).alias("id_a"), *[F.col(f).alias(f + "_a") for f in fields])
-    b = right.select(F.col(id_col).alias("id_b"), *[F.col(f).alias(f + "_b") for f in fields])
+    a = _side(left, fields, id_col, "a")
+    b = _side(right, fields, id_col, "b")
     return pairs.join(a, "id_a").join(b, "id_b")

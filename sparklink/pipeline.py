@@ -28,6 +28,7 @@ from sparklink.canonicalize import canonicalize
 from sparklink.checkpoints import Catalog, _fingerprint
 from sparklink.cluster import entity_map
 from sparklink.score import FieldModel, Variable
+from sparklink.session import session_expr
 
 
 def _input_fingerprint(df: DataFrame) -> str:
@@ -227,11 +228,14 @@ class SparkDedupe:
         full text never crosses the hydration shuffle."""
         fields = sorted({v.column for v in self.model.variables if v.kind != "text"})
         string_cols = {v.column for v in self.model.variables if v.kind in ("string", "shortstring", "levenshtein")}
-        slim = records.select(
-            "conv_id",
-            *[(F.substring(F.col(f), 1, 64).alias(f) if f in string_cols else F.col(f)) for f in fields],
+        cols = session_expr(
+            ("slim", tuple(fields), frozenset(string_cols)),
+            lambda: [
+                F.col("conv_id"),
+                *[(F.substring(F.col(f), 1, 64).alias(f) if f in string_cols else F.col(f)) for f in fields],
+            ],
         )
-        return slim, fields
+        return records.select(*cols), fields
 
     def slim_hydration_frame(self, records: DataFrame, vecs_by_col: dict[str, DataFrame]) -> tuple[DataFrame, list[str]]:
         """(slim frame + tf-idf arrays, hydrated field list): the complete
@@ -313,15 +317,14 @@ class SparkDedupe:
         for v in self.model.variables:
             if v.kind != "text":
                 continue
-            withd = withd.withColumn(
-                v.dist_col,
-                sparse_dot_udf(
-                    F.col(f"tfh_{v.column}_a"),
-                    F.col(f"tfw_{v.column}_a"),
-                    F.col(f"tfh_{v.column}_b"),
-                    F.col(f"tfw_{v.column}_b"),
+            c = v.column
+            cosine = session_expr(
+                ("sparse_dot", c),
+                lambda: sparse_dot_udf(
+                    F.col(f"tfh_{c}_a"), F.col(f"tfw_{c}_a"), F.col(f"tfh_{c}_b"), F.col(f"tfw_{c}_b")
                 ),
             )
+            withd = withd.withColumn(v.dist_col, cosine)
         return withd
 
     def _pair_features(self, records: DataFrame, pairs: DataFrame) -> DataFrame:

@@ -24,6 +24,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
 from sparklink import distances as D
+from sparklink.session import session_expr
 
 # ---------------------------------------------------------------------------
 # pandas UDFs for the string comparators (one Arrow batch per call)
@@ -396,16 +397,30 @@ class FieldModel:
     def _var_by_name(self) -> dict[str, Variable]:
         return {v.name: v for v in self.variables}
 
+    def _layout_key(self) -> tuple:
+        return (tuple(self.variables), tuple(tuple(x) for x in self.interactions))
+
     def distance_frame(self, hydrated: DataFrame) -> DataFrame:
         """hydrated pairs (fields as <col>_a / <col>_b) -> + distance columns.
 
         Column-expression comparators stay in whole-stage codegen; string
         comparators go through one vectorized pandas UDF each; 'text'
-        variables are attached by the caller via
-        ``distances.cosine_for_pairs`` (DataFrame sub-plan) before this and
-        referenced here by their dist_col.
+        variables get their cosine from the caller
+        (``SparkDedupe._features_from_hydrated``: a sparse dot over the
+        hydrated tf-idf arrays) under their dist_col.
+
+        The columns depend only on the variable layout, so they are built
+        once per session and layout (session.session_expr) and re-applied.
         """
         out = hydrated
+        for name, col in session_expr(("distances", self._layout_key()), self._distance_columns):
+            out = out.withColumn(name, col)
+        return out
+
+    def _distance_columns(self) -> list[tuple[str, Column]]:
+        """(name, expression) pairs distance_frame adds, in order; later
+        expressions may read earlier columns."""
+        out: list[tuple[str, Column]] = []
         for v in self.variables:
             l, r = F.col(v.column + "_a"), F.col(v.column + "_b")
             missing = l.isNull() | r.isNull()
@@ -416,9 +431,9 @@ class FieldModel:
                 # values outside the declared set behave as baseline
                 for (ca, cb), cname in zip(v.category_combos, v.combo_cols()):
                     hit = ((l == ca) & (r == cb)) | ((l == cb) & (r == ca))
-                    out = out.withColumn(cname, F.when(missing, F.lit(0.0)).otherwise(hit.cast("double")))
+                    out.append((cname, F.when(missing, F.lit(0.0)).otherwise(hit.cast("double"))))
                 if v.has_missing:
-                    out = out.withColumn(f"m_{v.dist_col}", (~missing).cast("double"))
+                    out.append((f"m_{v.dist_col}", (~missing).cast("double")))
                 continue
             if v.kind == "string":
                 # the DP kernels cap at 48/64 chars — truncate JVM-side so
@@ -469,7 +484,7 @@ class FieldModel:
                     "middle": _middle_score(fl_l["middle"], fl_r["middle"]),
                 }
                 for cname, ccol in zip(v.component_cols(), (comp[c] for c in v.components)):
-                    out = out.withColumn(cname, F.when(missing, F.lit(0.0)).otherwise(ccol))
+                    out.append((cname, F.when(missing, F.lit(0.0)).otherwise(ccol)))
                 # blended mean kept as dist_col for interactions / display
                 # only (NOT a feature — collinear with the components)
                 raw = sum(F.col(c) for c in v.component_cols()) / float(len(v.components))
@@ -500,7 +515,7 @@ class FieldModel:
                     "unit": unit_score,
                 }
                 for cname, ccol in zip(v.component_cols(), (comp[c] for c in v.components)):
-                    out = out.withColumn(cname, F.when(missing, F.lit(0.0)).otherwise(ccol))
+                    out.append((cname, F.when(missing, F.lit(0.0)).otherwise(ccol)))
                 # the r1/r2 fixed blend survives as the non-feature
                 # dist_col so interactions keep working
                 raw = (
@@ -509,19 +524,19 @@ class FieldModel:
                     + 0.10 * F.col(f"{v.dist_col}__unit")
                 )
             elif v.kind == "text":
-                # attached separately as a DataFrame sub-plan
-                # (distances.cosine_for_pairs); nothing to do per-row here
+                # the caller adds the sparse-dot cosine of the hydrated
+                # tf-idf arrays
                 continue
             elif v.kind in _COMPARATORS:
                 raw = _COMPARATORS[v.kind](l, r)
             else:
                 raise ValueError(f"unknown comparator kind {v.kind}")
-            out = out.withColumn(v.dist_col, F.when(missing, F.lit(0.0)).otherwise(raw))
+            out.append((v.dist_col, F.when(missing, F.lit(0.0)).otherwise(raw)))
             if v.has_missing:
-                out = out.withColumn(f"m_{v.dist_col}", (~missing).cast("double"))
+                out.append((f"m_{v.dist_col}", (~missing).cast("double")))
         byname = self._var_by_name()
         for a, b in self.interactions:
-            out = out.withColumn(f"x_{a}__{b}", F.col(byname[a].dist_col) * F.col(byname[b].dist_col))
+            out.append((f"x_{a}__{b}", F.col(byname[a].dist_col) * F.col(byname[b].dist_col)))
         return out
 
     def _check_layout(self) -> None:
@@ -538,13 +553,20 @@ class FieldModel:
             )
 
     def score_expr(self) -> Column:
-        """sigmoid(w·x + b) as a pure Column expression (JVM-side)."""
+        """sigmoid(w·x + b) as a pure Column expression (JVM-side), built
+        once per session, layout, weights and bias."""
         assert self.weights is not None, "fit or load the model first"
         self._check_layout()
-        z = F.lit(float(self.bias))
-        for w, c in zip(self.weights, self.feature_cols()):
-            z = z + F.lit(float(w)) * F.coalesce(F.col(c), F.lit(0.0))
-        return 1.0 / (1.0 + F.exp(-z))
+        weights = tuple(float(w) for w in self.weights)
+        bias = float(self.bias)
+
+        def build() -> Column:
+            z = F.lit(bias)
+            for w, c in zip(weights, self.feature_cols()):
+                z = z + F.lit(w) * F.coalesce(F.col(c), F.lit(0.0))
+            return 1.0 / (1.0 + F.exp(-z))
+
+        return session_expr(("score", self._layout_key(), weights, bias), build)
 
     def score(self, with_distances: DataFrame) -> DataFrame:
         return with_distances.withColumn("score", self.score_expr())

@@ -206,7 +206,8 @@ def test_lsh_production_planes_plan_size(spark):
 
 
 def test_tfidf_arrays_collapse_in_row_hash_collisions(spark):
-    from sparklink.distances import sparse_dot, tfidf_token_arrays_from_stats
+    from sparklink.blocking import record_token_vocab
+    from sparklink.distances import sparse_dot, tfidf_token_arrays_from_vocab
 
     # force collisions: hash = token length, so "aa" and "bb" collide
     tf = spark.createDataFrame(
@@ -217,7 +218,9 @@ def test_tfidf_arrays_collapse_in_row_hash_collisions(spark):
         [("aa", 1), ("bb", 2), ("ccc", 1), ("ddd", 1)], "token string, df int"
     )
     got = (
-        tfidf_token_arrays_from_stats(tf, dfreq, n_docs=10, hash_expr=lambda c: F.length(c).cast("int"))
+        tfidf_token_arrays_from_vocab(
+            record_token_vocab(tf, dfreq), n_docs=10, hash_expr=lambda c: F.length(c).cast("int")
+        )
         .toPandas()
         .set_index("record_id")
     )

@@ -29,16 +29,56 @@ def _stats(spark):
     return recs, tf, dfreq
 
 
+def _tfidf_arrays_windowed(tf, dfreq, n_docs: int, top_m: int = 48, max_df_frac: float = 0.5):
+    """Reference for tfidf_token_arrays_from_vocab: the window-ranked form
+    the engine used before the per-record vocab (df-filtered join, then a
+    row_number window over (w desc, token asc) per record, then the same
+    hash / max-weight dedup / L2-normalize tail)."""
+    from pyspark.sql import Window
+
+    dfreq = dfreq.filter(F.col("df") <= int(max(1, max_df_frac * n_docs)))
+    w = tf.join(F.broadcast(dfreq), "token").withColumn(
+        "w", F.col("tf") * F.log((F.lit(float(n_docs)) + 1.0) / (F.col("df") + 1.0))
+    )
+    win = Window.partitionBy("record_id").orderBy(F.desc("w"), F.asc("token"))
+    top = w.withColumn("rn", F.row_number().over(win)).filter(F.col("rn") <= top_m)
+    h = F.pmod(F.xxhash64(F.col("token")), F.lit(1 << 31)).cast("int")
+    agg = top.groupBy("record_id").agg(F.collect_list(F.struct(h.alias("h"), F.col("w").alias("w"))).alias("hw0"))
+    agg = agg.withColumn(
+        "hws",
+        F.array_sort(
+            "hw0",
+            lambda a, b: F.when(a["h"] < b["h"], -1)
+            .when(a["h"] > b["h"], 1)
+            .otherwise(F.when(a["w"] > b["w"], -1).when(a["w"] < b["w"], 1).otherwise(0)),
+        ),
+    ).drop("hw0")
+    agg = agg.withColumn(
+        "hw",
+        F.filter(
+            "hws",
+            lambda x, i: (i == 0) | (x["h"] != F.element_at(F.col("hws"), F.greatest(i, F.lit(1)))["h"]),
+        ),
+    )
+    agg = agg.withColumn("norm", F.sqrt(F.aggregate("hw", F.lit(0.0), lambda acc, s: acc + s["w"] * s["w"])))
+    safe_w = lambda s: F.when(F.col("norm") > 0, s["w"] / F.col("norm")).otherwise(F.lit(0.0))  # noqa: E731
+    return agg.select(
+        "record_id",
+        F.transform("hw", lambda s: s["h"]).alias("tfh"),
+        F.transform("hw", lambda s: safe_w(s).cast("float")).alias("tfw"),
+    )
+
+
 def test_tfidf_vocab_path_matches_stats_path(spark):
     """tfidf_token_arrays_from_vocab (array_sort ranking, no window) must
-    be bit-identical to tfidf_token_arrays_from_stats (row_number window)
-    — the r6 exchange-removal rests on this equivalence."""
+    be bit-identical to the window-ranked reference — the r6
+    exchange-removal rests on this equivalence."""
     from sparklink.blocking import record_token_vocab
-    from sparklink.distances import tfidf_token_arrays_from_stats, tfidf_token_arrays_from_vocab
+    from sparklink.distances import tfidf_token_arrays_from_vocab
 
     recs, tf, dfreq = _stats(spark)
     n = recs.count()
-    old = tfidf_token_arrays_from_stats(tf, dfreq, n).toPandas().set_index("record_id").sort_index()
+    old = _tfidf_arrays_windowed(tf, dfreq, n).toPandas().set_index("record_id").sort_index()
     vocab = record_token_vocab(tf, dfreq)
     new = tfidf_token_arrays_from_vocab(vocab, n).toPandas().set_index("record_id").sort_index()
     assert list(old.index) == list(new.index)

@@ -34,12 +34,31 @@ def _run(cmd: list[str], cwd: str, env: dict, timeout: int = 900) -> dict:
     return json.loads(r.stdout.strip().splitlines()[-1])
 
 
-def test_spark_submit_pyfiles_end_to_end(tmp_path):
+def _build_pyfiles(out: str) -> str:
     build = subprocess.run(
-        ["bash", os.path.join(REPO, "tools", "build_pyfiles.sh")], capture_output=True, text=True
+        ["bash", os.path.join(REPO, "tools", "build_pyfiles.sh"), out], capture_output=True, text=True
     )
     assert build.returncode == 0, build.stderr
-    zip_path = os.path.join(REPO, "dist", "sparklink.zip")
+    return out
+
+
+def test_build_pyfiles_is_deterministic(tmp_path):
+    """Two builds of one tree are byte-identical, so a rebuilt
+    dist/sparklink.zip only differs when the sources do."""
+    import zipfile
+
+    first = _build_pyfiles(str(tmp_path / "a" / "sparklink.zip"))
+    second = _build_pyfiles(str(tmp_path / "b" / "sparklink.zip"))
+    with open(first, "rb") as f1, open(second, "rb") as f2:
+        assert f1.read() == f2.read()
+    names = zipfile.ZipFile(first).namelist()
+    assert names == sorted(names)
+    assert {"sparklink/__init__.py", "sparklink/cli.py", "transcript_model.json"} <= set(names)
+    assert not [n for n in names if "__pycache__" in n or n.endswith(".pyc")]
+
+
+def test_spark_submit_pyfiles_end_to_end(tmp_path):
+    zip_path = _build_pyfiles(str(tmp_path / "sparklink.zip"))
 
     # the driver script lives OUTSIDE the repo and runs with cwd=tmp_path,
     # so `import sparklink` can only resolve from the --py-files zip
