@@ -13,10 +13,12 @@ dedup/candidate join. Keys are namespaced ``"<pid>:<key>"`` so different
 predicates never collide (same convention as dedupe's fingerprinter).
 
 Scale controls (BASELINE.json north_rule: "skew handled explicitly"):
-- ``cap_block_sizes``: drop or salt oversized blocks before the self-join
-  squares them (dedupe drops oversized blocks internally [lib]).
-- TF-IDF canopy index predicates are a two-pass DataFrame job (IDF agg ->
-  broadcast-join -> per-record top-m tokens), SURVEY.md §2.3.
+- ``cap_block_sizes``: drop oversized blocks before the self-join squares
+  them (dedupe drops oversized blocks internally [lib]).
+- Index predicates (TF-IDF canopy, minhash bands; SURVEY.md §2.3) derive
+  from one shared token-stats frame: ``partitioned_token_stats`` ->
+  ``record_token_vocab`` -> ``tfidf_canopy_keys_from_vocab``, and
+  ``minhash_band_keys_from_tokens`` over the same token arrays.
 """
 
 from __future__ import annotations
@@ -24,9 +26,10 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sparklink.dedup import band_keys, kmin_signatures, word_shingles_from_tokens
 from sparklink.preprocess import tokens
 from sparklink.session import session_expr
 from sparklink.util import widen_to_parallelism
@@ -102,33 +105,6 @@ class Predicate:
         ks = self.keys(F.col(self.column))
         ks = F.coalesce(ks, F.array())
         return F.transform(ks, lambda k: F.concat(F.lit(self.pid + ":"), k))
-
-
-def default_predicates(columns: dict[str, str]) -> list[Predicate]:
-    """A reasonable starter set; the learner (learn.py) selects a subset.
-
-    columns: logical role -> column name, e.g. {"text": "conv_text",
-    "short": "first_user_text", "set": "tools"}.
-    """
-    preds: list[Predicate] = []
-    if "short" in columns:
-        c = columns["short"]
-        preds += [
-            Predicate(f"first_tok({c})", c, first_token),
-            Predicate(f"tokens({c})", c, token_field),
-            Predicate(f"pre4({c})", c, lambda x: first_n_chars(x, 4)),
-            Predicate(f"acronym({c})", c, sorted_acronym),
-        ]
-    if "text" in columns:
-        c = columns["text"]
-        preds += [
-            Predicate(f"ints({c})", c, common_integers),
-            Predicate(f"first2tok({c})", c, first_two_tokens),
-        ]
-    if "set" in columns:
-        c = columns["set"]
-        preds += [Predicate(f"arr({c})", c, array_field)]
-    return preds
 
 
 # --------------------------------------------------------------------------
@@ -233,10 +209,11 @@ def _token_columns(column: str, id_col: str) -> tuple[list[Column], Column, Colu
 
 def partitioned_token_stats(
     records: DataFrame, column: str, id_col: str = "conv_id"
-) -> tuple[DataFrame, DataFrame]:
-    """(toks, tf) persisted HASH-PARTITIONED BY record_id and eagerly
-    materialized — the r6 layout both the batch pipeline and the
-    gazetteer index build share.
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(toks, tf, dfreq) like :func:`token_stats`, with toks and tf
+    persisted HASH-PARTITIONED BY record_id and eagerly materialized — the
+    r6 layout both the batch pipeline and the gazetteer index build share.
+    dfreq stays lazy over the persisted tf.
 
     Partitioning the token arrays BEFORE the explode means the
     (record, token) tf aggregate, the per-record vocab collect
@@ -246,9 +223,9 @@ def partitioned_token_stats(
     exploded token rows (~30-200x more of them) once per consumer. The
     eager counts matter — an unmaterialized AQE-cached plan reports
     unknown partitioning, and consumers planned against it would
-    re-insert the exchanges. Callers own unpersisting both frames.
+    re-insert the exchanges. Callers own unpersisting toks and tf.
     """
-    tok_cols, token, tf_count, _ = session_expr(
+    tok_cols, token, tf_count, df_count = session_expr(
         ("token_stats", column, id_col), lambda: _token_columns(column, id_col)
     )
     toks = records.select(*tok_cols).repartition("record_id")
@@ -258,13 +235,13 @@ def partitioned_token_stats(
     tf = ex.groupBy("record_id", "token").agg(tf_count)
     tf = tf.persist()
     tf.count()
-    return toks, tf
+    return toks, tf, tf.groupBy("token").agg(df_count)
 
 
 def record_token_vocab(tf: DataFrame, dfreq: DataFrame) -> DataFrame:
     """(record_id, vocab array<struct<token,tf,df>>): each record's token
     stats collected into ONE row — the shared base for canopy keys and the
-    scorer's tf-idf arrays.
+    scorer's tf-idf arrays, which both rank it with :func:`ranked_vocab`.
 
     Why: both consumers rank a record's tokens by tf*idf, which the r1-r5
     shape did with a window (partitionBy record_id + sort) EACH — two
@@ -272,26 +249,20 @@ def record_token_vocab(tf: DataFrame, dfreq: DataFrame) -> DataFrame:
     per record (one exchange, hash aggregate, no sort) and ranking
     array-side replaces both (guide §2.4: operations keyed the same way
     share one exchange). Selection and weights are bit-identical: the
-    array comparators replicate the windows' (w desc, token asc) order.
+    array comparator replicates the windows' (w desc, token asc) order.
     """
     vocab = session_expr(("token_vocab",), lambda: F.collect_list(F.struct("token", "tf", "df")).alias("vocab"))
     return tf.join(F.broadcast(dfreq), "token").groupBy("record_id").agg(vocab)
 
 
-def tfidf_canopy_keys_from_vocab(
-    vocab: DataFrame,
-    n_docs: int,
-    column_label: str,
-    top_m: int = 3,
-    min_df: int = 1,
-    max_df_frac: float = 0.2,
-) -> DataFrame:
-    """Canopy keys from the collected per-record vocab (no window, no new
-    shuffle): filter df bounds, weight by tf*idf, sort (w desc, token asc),
-    keep top_m — the exact selection tfidf_canopy_keys_from_stats makes
-    with its window."""
+def ranked_vocab(n_docs: int, max_df_frac: float) -> Column:
+    """The ``vocab`` column's tokens with df <= max_df_frac*n_docs as
+    array<struct<token, w>>, w = tf*log((n_docs+1)/(df+1)), sorted by
+    (w desc, token asc) — the one tf-idf ranking behind canopy keys and
+    the scorer's tf-idf arrays. Tokens above the df cut are stop-worded
+    out: they would create huge, useless blocks and carry near-zero idf."""
     max_df = int(max(1, max_df_frac * n_docs))
-    eligible = F.filter("vocab", lambda s: (s["df"] >= min_df) & (s["df"] <= max_df))
+    eligible = F.filter("vocab", lambda s: s["df"] <= max_df)
     wt = F.transform(
         eligible,
         lambda s: F.struct(
@@ -299,160 +270,59 @@ def tfidf_canopy_keys_from_vocab(
             (s["tf"] * F.log(F.lit(float(n_docs + 1)) / (s["df"] + 1.0))).alias("w"),
         ),
     )
-    ranked = F.array_sort(
+    return F.array_sort(
         wt,
         lambda a, b: F.when(a["w"] > b["w"], -1)
         .when(a["w"] < b["w"], 1)
         .otherwise(F.when(a["token"] < b["token"], -1).when(a["token"] > b["token"], 1).otherwise(0)),
     )
+
+
+def tfidf_canopy_keys_from_vocab(
+    vocab: DataFrame,
+    n_docs: int,
+    column_label: str,
+    top_m: int = 3,
+    max_df_frac: float = 0.2,
+) -> DataFrame:
+    """Per-record canopy keys = its top_m :func:`ranked_vocab` tokens
+    (no window, no new shuffle). Mirrors dedupe's TfidfTextCanopyPredicate
+    index build (mysql_example/mysql_example.py:202-211 [lib]).
+    Returns (record_id, block_key)."""
     keys = F.transform(
-        F.slice(ranked, 1, top_m),
+        F.slice(ranked_vocab(n_docs, max_df_frac), 1, top_m),
         lambda s: F.concat(F.lit(f"canopy({column_label})"), F.lit(":"), s["token"]),
     )
     return vocab.select("record_id", F.explode(keys).alias("block_key"))
 
 
-def tfidf_canopy_keys_from_stats(
-    tf: DataFrame,
-    dfreq: DataFrame,
-    n_docs: int,
-    column_label: str,
-    top_m: int = 3,
-    min_df: int = 1,
-    max_df_frac: float = 0.2,
-) -> DataFrame:
-    """Canopy keys from a shared token-stats frame (no new explode)."""
-    d = dfreq.filter((F.col("df") >= min_df) & (F.col("df") <= int(max(1, max_df_frac * n_docs))))
-    scored = tf.join(F.broadcast(d), "token").withColumn(
-        "w", F.col("tf") * F.log(F.lit(float(n_docs + 1)) / (F.col("df") + 1.0))
-    )
-    w = Window.partitionBy("record_id").orderBy(F.desc("w"), F.asc("token"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= top_m)
-        .select(
-            F.concat(F.lit(f"canopy({column_label})"), F.lit(":"), F.col("token")).alias("block_key"), "record_id"
-        )
-    )
-
-
 def minhash_band_keys_from_tokens(
     toks: DataFrame, k: int = 32, bands: int = 8, shingle_n: int = 3
 ) -> DataFrame:
-    """MinHash band keys over word n-gram shingles, derived from the shared
-    materialized token-array frame (blocking.token_stats) — identical
-    semantics to minhash_band_keys but with no re-tokenization pass.
+    """MinHash band keys over word n-gram shingles of the shared token-array
+    frame (``toks`` of partitioned_token_stats): records agreeing on any
+    band of their signature share a key. The recall backstop for noisy
+    text where token/prefix predicates miss (scattered word drops/typos):
+    with k=32, bands=8 (r=4), a pair at word-shingle Jaccard 0.7 bands
+    together with p≈0.89 while random pairs rarely collide. This is
+    dedupe's LSH index-predicate idea [lib] on the signature and band key
+    of dedup.minhash_lsh_pairs.
+
+    Groups ``toks`` as given: over the persisted record-partitioned frame
+    the k-min aggregate adds no exchange.
 
     Word-shingle (not token-set) minhash is deliberate: token-set bands at
     equal (k, bands) collide far more readily — measured 5.8x the candidate
     pairs at the bench corpus for the same F1 — so shingles are the right
     precision point for the recall-backstop role; the cost of their explode
     is small once the token array is already materialized.
-    Returns (block_key, record_id).
+    Returns (record_id, block_key).
     """
-    from sparklink.dedup import _MERSENNE, _perm_params, word_shingles_from_tokens
-
-    r = k // bands
-    sh = toks.select(
-        "record_id", F.explode(word_shingles_from_tokens(F.col("toks"), shingle_n)).alias("s")
-    ).select("record_id", (F.abs(F.xxhash64("s")) % F.lit(_MERSENNE)).alias("x"))
-    mins = [
-        F.min((F.col("x") * F.lit(a) + F.lit(b)) % F.lit(_MERSENNE)).alias(f"m{i}")
-        for i, (a, b) in enumerate(_perm_params(k))
-    ]
-    sigs = sh.groupBy("record_id").agg(*mins).select(
-        "record_id", F.array(*[F.col(f"m{i}") for i in range(k)]).alias("sig")
-    )
-    band_keys = F.array(
-        *[
-            F.concat(F.lit(f"mh{b}:"), F.xxhash64(F.slice("sig", b * r + 1, r).cast("array<string>")).cast("string"))
-            for b in range(bands)
-        ]
-    )
+    sigs = kmin_signatures(toks, "record_id", word_shingles_from_tokens(F.col("toks"), shingle_n), k)
     # one band key per (record, band) with a distinct 'mh<band>:' prefix —
     # the (block_key, record_id) relation is distinct by construction, so
     # the former dropDuplicates was a no-op shuffle (guide §2.4)
-    return sigs.select(F.col("record_id"), F.explode(band_keys).alias("block_key"))
-
-
-# --------------------------------------------------------------------------
-# TF-IDF canopy index predicate (two-pass job; SURVEY §2.3 index predicates)
-# --------------------------------------------------------------------------
-
-
-def tfidf_canopy_keys(
-    records: DataFrame,
-    column: str,
-    id_col: str = "conv_id",
-    top_m: int = 3,
-    min_df: int = 1,
-    max_df_frac: float = 0.2,
-) -> DataFrame:
-    """Per-record canopy keys = its top-m TF-IDF tokens.
-
-    Pass 1: token document frequencies (one agg). Pass 2: rank tokens per
-    record by tf*idf, keep top-m. Tokens above ``max_df_frac`` document
-    frequency are stop-worded out (they would create huge, useless blocks —
-    the skew source). Mirrors dedupe's TfidfTextCanopyPredicate index build
-    (mysql_example/mysql_example.py:202-211 [lib]).
-    Returns (block_key, record_id).
-    """
-    n_docs = records.count()
-    records = widen_to_parallelism(records)
-    tok = records.select(F.col(id_col).alias("record_id"), F.explode(F.array_distinct(tokens(F.col(column)))).alias("token"))
-    df_counts = tok.groupBy("token").agg(F.count("*").alias("df"))
-    df_counts = df_counts.filter((F.col("df") >= min_df) & (F.col("df") <= int(max(1, max_df_frac * n_docs))))
-    tf = records.select(F.col(id_col).alias("record_id"), F.explode(tokens(F.col(column))).alias("token")).groupBy(
-        "record_id", "token"
-    ).agg(F.count("*").alias("tf"))
-    scored = tf.join(F.broadcast(df_counts), "token").withColumn(
-        "w", F.col("tf") * F.log(F.lit(float(n_docs + 1)) / (F.col("df") + 1.0))
-    )
-    w = Window.partitionBy("record_id").orderBy(F.desc("w"), F.asc("token"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= top_m)
-        .select(F.concat(F.lit(f"canopy({column})") , F.lit(":"), F.col("token")).alias("block_key"), "record_id")
-    )
-
-
-def minhash_band_keys(
-    records: DataFrame,
-    column: str,
-    id_col: str = "conv_id",
-    k: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-    shingle: str = "word",
-) -> DataFrame:
-    """MinHash-band blocking keys: records agreeing on any band of their
-    minhash signature share a key. The recall backstop for noisy text where
-    token/prefix predicates miss (scattered word drops/typos): with k=32,
-    bands=8 (r=4), a pair at word-shingle Jaccard 0.7 bands together with
-    p≈0.89 while random pairs rarely collide. This is dedupe's LSH
-    index-predicate idea [lib] executed as the same explode/groupBy plan as
-    dedup.minhash_lsh_pairs. Returns (block_key, record_id).
-    """
-    from sparklink.dedup import minhash_signatures
-
-    sigs = minhash_signatures(
-        records.select(F.col(id_col), F.col(column)),
-        text_col=column,
-        id_col=id_col,
-        k=k,
-        shingle_n=shingle_n,
-        shingle=shingle,
-    )
-    r = k // bands
-    band_keys = F.array(
-        *[
-            F.concat(F.lit(f"mh{b}:"), F.xxhash64(F.slice("sig", b * r + 1, r).cast("array<string>")).cast("string"))
-            for b in range(bands)
-        ]
-    )
-    return sigs.select(F.col(id_col).alias("record_id"), F.explode(band_keys).alias("block_key")).dropDuplicates(
-        ["block_key", "record_id"]
-    )
+    return sigs.select(F.col("record_id"), F.explode(band_keys("mh", k, bands)).alias("block_key"))
 
 
 # --------------------------------------------------------------------------
@@ -478,24 +348,3 @@ def cap_block_sizes(blocking_map: DataFrame, max_block_size: int = 200) -> DataF
     )
     oversized = blocking_map.groupBy("block_key").agg(n).filter(too_big).select("block_key")
     return blocking_map.join(F.broadcast(oversized), "block_key", "left_anti")
-
-
-def salt_block_sizes(blocking_map: DataFrame, salt_threshold: int = 64, n_salts: int = 8) -> DataFrame:
-    """Alternative to dropping: split a hot block into n_salts sub-blocks.
-
-    Within-sub-block pairs are preserved; cross-sub-block pairs are traded
-    for bounded skew (recall loss is measured, not silent — see
-    metrics.py). Use for keys between salt_threshold and the hard cap.
-    Same plan contract as cap_block_sizes: the input is read twice
-    (sizes aggregate + salt join) — persist or stage an expensive map
-    before calling.
-    """
-    sizes = blocking_map.groupBy("block_key").agg(F.count("*").alias("n"))
-    bm = blocking_map.join(F.broadcast(sizes.filter(F.col("n") > salt_threshold)), "block_key", "left")
-    return bm.withColumn(
-        "block_key",
-        F.when(
-            F.col("n").isNotNull(),
-            F.concat(F.col("block_key"), F.lit("#"), (F.abs(F.hash("record_id")) % n_salts).cast("string")),
-        ).otherwise(F.col("block_key")),
-    ).drop("n")

@@ -74,11 +74,14 @@ def _canonical_columns(extra_cols: tuple[str, ...]) -> tuple[list[Column], list[
         F.array_join(
             F.transform(F.filter("turns", lambda t: t["role"] == "user"), txt), " "
         ).alias("user_text"),
-        F.element_at(F.transform(F.filter("turns", lambda t: t["role"] == "user"), txt), 1).alias(
+        # try_element_at: a conversation without a user (assistant) turn
+        # gets a NULL first_user_text (last_assistant_text) instead of an
+        # ANSI index error
+        F.try_element_at(F.transform(F.filter("turns", lambda t: t["role"] == "user"), txt), F.lit(1)).alias(
             "first_user_text"
         ),
-        F.element_at(
-            F.transform(F.filter("turns", lambda t: t["role"] == "assistant"), txt), -1
+        F.try_element_at(
+            F.transform(F.filter("turns", lambda t: t["role"] == "assistant"), txt), F.lit(-1)
         ).alias("last_assistant_text"),
         F.array_sort(
             F.array_distinct(F.filter(F.transform("turns", lambda t: t["tool"]), lambda x: x.isNotNull()))

@@ -78,15 +78,11 @@ def char_shingles(col, n: int = 5, pre_normalized: bool = False):
     )
 
 
-def word_shingles(col, n: int = 3):
-    """Distinct word n-gram shingles — ~5x fewer rows than char shingles on
-    prose; the cheap choice when minhash feeds blocking rather than exact
-    near-dup estimation. Prefer word_shingles_from_tokens over a
-    materialized token column (see char_shingles note)."""
-    return word_shingles_from_tokens(tokens(F.lower(col)), n)
-
-
 def word_shingles_from_tokens(toks, n: int = 3):
+    """Distinct word n-gram shingles of a token array — ~5x fewer rows than
+    char shingles on prose; the cheap choice when minhash feeds blocking
+    rather than exact near-dup estimation. Pass a materialized token
+    column (see char_shingles note)."""
     return F.array_distinct(
         F.transform(
             F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1))),
@@ -125,14 +121,37 @@ def minhash_signatures(
     else:
         base = docs.select(F.col(id_col), tokens(F.lower(F.col(text_col))).alias("__t"))
         sh_expr = word_shingles_from_tokens(F.col("__t"), shingle_n)
+    return kmin_signatures(base, id_col, sh_expr, k, hash_mode)
+
+
+def kmin_signatures(frame: DataFrame, id_col: str, shingles, k: int, hash_mode: str = "xxhash") -> DataFrame:
+    """(id_col, sig array<bigint>[k]) from a per-row shingle array: hash
+    each shingle below p, then ONE aggregate of the k mins of
+    (a*x + b) mod p — the minhash signature of minhash_signatures and
+    blocking.minhash_band_keys_from_tokens. Groups ``frame`` by id_col as
+    given, so a frame already partitioned by id_col adds no exchange."""
     hx = poly_hash(F.col("s")) if hash_mode == "portable" else F.abs(F.xxhash64("s")) % F.lit(_MERSENNE)
-    sh = base.select(F.col(id_col), F.explode(sh_expr).alias("s")).select(id_col, hx.alias("x"))
+    sh = frame.select(F.col(id_col), F.explode(shingles).alias("s")).select(id_col, hx.alias("x"))
     mins = [
         F.min((F.col("x") * F.lit(a) + F.lit(b)) % F.lit(_MERSENNE)).alias(f"m{i}")
         for i, (a, b) in enumerate(_perm_params(k))
     ]
     agg = sh.groupBy(id_col).agg(*mins)
     return agg.select(F.col(id_col), F.array(*[F.col(f"m{i}") for i in range(k)]).alias("sig"))
+
+
+def band_keys(prefix: str, k: int, bands: int, hash_mode: str = "xxhash"):
+    """array<string> of one LSH bucket key per band of the ``sig`` column:
+    ``<prefix><band>:`` + xxhash64 of the band's k/bands rows.
+    hash_mode='portable' keys by the literal band values instead
+    (engine-portable; the DuckDB oracle reproduces it exactly)."""
+    r = k // bands
+    keys = []
+    for b in range(bands):
+        band = F.slice("sig", b * r + 1, r).cast("array<string>")
+        key = F.array_join(band, "_") if hash_mode == "portable" else F.xxhash64(band).cast("string")
+        keys.append(F.concat(F.lit(f"{prefix}{b}:"), key))
+    return F.array(*keys)
 
 
 def minhash_lsh_pairs(
@@ -176,22 +195,9 @@ def minhash_lsh_pairs(
         # Materialize the slim (id, sig) frame once within this invocation.
         # Caller-staged ``sigs`` (the documented 100 TB contract) skips this.
         sigs = sigs.localCheckpoint(eager=True)
-    r = k // bands
-    if hash_mode == "portable":
-        band_keys = F.array(
-            *[
-                F.concat(F.lit(f"b{b}:"), F.array_join(F.slice("sig", b * r + 1, r).cast("array<string>"), "_"))
-                for b in range(bands)
-            ]
-        )
-    else:
-        band_keys = F.array(
-            *[
-                F.concat(F.lit(f"b{b}:"), F.xxhash64(F.slice("sig", b * r + 1, r).cast("array<string>")).cast("string"))
-                for b in range(bands)
-            ]
-        )
-    bm = sigs.select(F.col(id_col).alias("record_id"), "sig", F.explode(band_keys).alias("block_key"))
+    bm = sigs.select(
+        F.col(id_col).alias("record_id"), "sig", F.explode(band_keys("b", k, bands, hash_mode)).alias("block_key")
+    )
     sizes = bm.groupBy("block_key").agg(F.count("*").alias("n")).filter(F.col("n") > max_bucket)
     if on_oversized is not None:
         on_oversized(sizes.count(), max_bucket)

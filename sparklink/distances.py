@@ -28,6 +28,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
+from sparklink.blocking import ranked_vocab, record_token_vocab, token_stats
 from sparklink.session import session_expr
 
 # Rows per cache block in the DP kernels. At Arrow's 10k-row default
@@ -411,8 +412,6 @@ def tfidf_token_arrays(
     One tokenization (blocking.token_stats, which lowercases) feeds the
     per-record vocab that :func:`tfidf_token_arrays_from_vocab` ranks.
     """
-    from sparklink.blocking import record_token_vocab, token_stats
-
     n_docs = records.count()
     _, tf, dfreq = token_stats(records, column, id_col)
     return tfidf_token_arrays_from_vocab(
@@ -427,21 +426,7 @@ def _default_token_hash(c: Column) -> Column:
 def _tfidf_array_columns(n_docs: int, top_m: int, max_df_frac: float, hash_expr) -> tuple[Column, ...]:
     """The column expressions of :func:`tfidf_token_arrays_from_vocab`, in
     the order it applies them."""
-    max_df = int(max(1, max_df_frac * n_docs))
-    eligible = F.filter("vocab", lambda s: s["df"] <= max_df)
-    wt = F.transform(
-        eligible,
-        lambda s: F.struct(
-            s["token"].alias("token"),
-            (s["tf"] * F.log((F.lit(float(n_docs)) + 1.0) / (s["df"] + 1.0))).alias("w"),
-        ),
-    )
-    ranked = F.array_sort(
-        wt,
-        lambda a, b: F.when(a["w"] > b["w"], -1)
-        .when(a["w"] < b["w"], 1)
-        .otherwise(F.when(a["token"] < b["token"], -1).when(a["token"] > b["token"], 1).otherwise(0)),
-    )
+    ranked = ranked_vocab(n_docs, max_df_frac)
     hw0 = F.transform(
         F.slice(ranked, 1, top_m),
         lambda s: F.struct(hash_expr(s["token"]).alias("h"), s["w"].alias("w")),
@@ -488,8 +473,8 @@ def tfidf_token_arrays_from_vocab(
     """tf-idf token arrays from the collected per-record vocab frame
     (blocking.record_token_vocab) — no window, no extra shuffle.
 
-    Filter df <= max_df_frac*n_docs, weight tf*log((n+1)/(df+1)), keep the
-    top_m by (w desc, token asc) with an array_sort + slice, hash each
+    Keep the top_m tokens of blocking.ranked_vocab (df <= max_df_frac *
+    n_docs, weight tf*log((n+1)/(df+1)), (w desc, token asc)), hash each
     token, then L2-normalize. A record whose every token is stop-worded
     out gets no row.
 

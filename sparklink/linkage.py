@@ -167,23 +167,18 @@ class SparkGazetteer:
         # the record_id-partitioned layout so the tf aggregate and the
         # vocab collect add no exchange over the corpus (the same shape
         # pipeline._token_stats uses)
-        tf_cache: dict[str, DataFrame] = {}
+        stats: dict[str, tuple[DataFrame, DataFrame, DataFrame]] = {}
 
-        def tf_for(col: str) -> DataFrame:
-            if col not in tf_cache:
-                toks_c, t = B.partitioned_token_stats(canonical_records, col)
-                tf_cache[col] = t
-                tf_cache[f"__toks_{col}"] = toks_c
-            return tf_cache[col]
-
-        def dfreq_for(col: str) -> DataFrame:
-            return tf_for(col).groupBy("token").agg(F.count("*").alias("df"))
+        def stats_for(col: str) -> tuple[DataFrame, DataFrame, DataFrame]:
+            if col not in stats:
+                stats[col] = B.partitioned_token_stats(canonical_records, col)
+            return stats[col]
 
         def slim_thunk() -> DataFrame:
             # reuses the already-staged/persisted dfreq (self._dfreq)
             vecs_by_col = {}
             for col in self._text_cols():
-                vocab = B.record_token_vocab(tf_for(col), self._dfreq[col])
+                vocab = B.record_token_vocab(stats_for(col)[1], self._dfreq[col])
                 vecs_by_col[col] = D.tfidf_token_arrays_from_vocab(vocab, self._n_docs)
             slim, self._hyd_fields = dd.slim_hydration_frame(canonical_records, vecs_by_col)
             return slim
@@ -212,7 +207,7 @@ class SparkGazetteer:
             )
             self._dfreq = {}
             for col in self._text_cols():
-                self._dfreq[col] = catalog.stage(f"gazetteer_dfreq_{col}", params, lambda c=col: dfreq_for(c))
+                self._dfreq[col] = catalog.stage(f"gazetteer_dfreq_{col}", params, lambda c=col: stats_for(c)[2])
             slim = catalog.stage("gazetteer_slim", params, slim_thunk)
             # the staged slim table's column list IS the hydration field
             # list (minus the id) — recover it so load_index() in a fresh
@@ -229,7 +224,7 @@ class SparkGazetteer:
             idx = idx_thunk()
             self._dfreq = {}
             for col in self._text_cols():
-                d = dfreq_for(col).persist()
+                d = stats_for(col)[2].persist()
                 d.count()
                 self._dfreq[col] = d
             slim = slim_thunk().persist()
@@ -237,8 +232,9 @@ class SparkGazetteer:
         self._slim = slim
         self._index = idx.persist()
         self._index.count()
-        for t in tf_cache.values():
-            t.unpersist()
+        for toks, tf, _ in stats.values():
+            toks.unpersist()
+            tf.unpersist()
 
     def load_index(self, catalog) -> None:
         """Resume a previously indexed gazetteer from the catalog (new

@@ -137,9 +137,9 @@ class SparkDedupe:
         cached = getattr(self, "_tf_cache", None)
         if cached is not None and cached[0] is records and cached[1] == column:
             return cached[2], cached[3], cached[4]
-        toks, tf = B.partitioned_token_stats(records, column)
+        self._drop_tf_cache()
+        toks, tf, dfreq = B.partitioned_token_stats(records, column)
         self._held_frames = getattr(self, "_held_frames", []) + [tf]
-        dfreq = tf.groupBy("token").agg(F.count("*").alias("df"))
         vocab = B.record_token_vocab(tf, dfreq).persist()
         n_docs = records.count()
         self._tf_cache = (records, column, toks, vocab, n_docs)
@@ -152,14 +152,17 @@ class SparkDedupe:
         stage wastes executor memory (at scale: eviction/spill pressure).
         Releasing earlier would silently recompute the whole explode inside
         the next job that references a lazy scored-pairs frame."""
+        self._drop_tf_cache()
+        for df in getattr(self, "_held_frames", []):
+            df.unpersist()
+        self._held_frames = []
+
+    def _drop_tf_cache(self) -> None:
         cached = getattr(self, "_tf_cache", None)
         if cached is not None:
             cached[2].unpersist()
             cached[3].unpersist()
             self._tf_cache = None
-        for df in getattr(self, "_held_frames", []):
-            df.unpersist()
-        self._held_frames = []
 
     def blocking_map(self, records: DataFrame) -> DataFrame:
         def thunk():
@@ -271,7 +274,6 @@ class SparkDedupe:
         run the scoring stage on a differently-sized fleet (the shape
         bench.py's N-vs-4N executor proxy measures).
         """
-        slim, fields = self._slim_base(records)
         # r6: the old repartition(n, id_a, id_b) here was a WASTED exchange
         # — the very next operator joins on id_a alone, which cannot reuse
         # an (id_a, id_b) hash partitioning and immediately re-shuffles
@@ -284,29 +286,22 @@ class SparkDedupe:
         if n_pair_parts:
             pairs = pairs.repartition(int(n_pair_parts), "id_a", "id_b")
         text_vars = [v for v in self.model.variables if v.kind == "text"]
-        vec_fields = []
+        cached = getattr(self, "_tf_cache", None)
+        vecs_by_col = {}
         for v in text_vars:
-            cached = getattr(self, "_tf_cache", None)
             if cached is not None and cached[0] is records and cached[1] == v.column:
                 # reuse the blocking build's shared per-record vocab (one
                 # collect exchange serves canopy AND these arrays)
-                vecs = D.tfidf_token_arrays_from_vocab(cached[3], cached[4])
+                vecs_by_col[v.column] = D.tfidf_token_arrays_from_vocab(cached[3], cached[4])
             else:
-                vecs = D.tfidf_token_arrays(records, v.column)
-            slim = slim.join(
-                vecs.withColumnRenamed("record_id", "conv_id")
-                .withColumnRenamed("tfh", f"tfh_{v.column}")
-                .withColumnRenamed("tfw", f"tfw_{v.column}"),
-                "conv_id",
-                "left",
-            )
-            vec_fields += [f"tfh_{v.column}", f"tfw_{v.column}"]
+                vecs_by_col[v.column] = D.tfidf_token_arrays(records, v.column)
+        slim, fields = self.slim_hydration_frame(records, vecs_by_col)
         if text_vars:
             # both hydration sides read the slim frame; materialize it so
             # the tf-idf array build (vocab sort/slice/normalize chain)
             # runs once instead of once per side — a few MB of slim rows
             slim = slim.localCheckpoint(eager=True)
-        return P.hydrate(pairs, slim, fields + vec_fields)
+        return P.hydrate(pairs, slim, fields)
 
     def _features_from_hydrated(self, hyd: DataFrame) -> DataFrame:
         """Hydrated pair frame -> + all model distance columns (the

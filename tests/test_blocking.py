@@ -46,17 +46,6 @@ def test_cap_block_sizes(spark):
     assert set(capped.toPandas().block_key) == {"cold"}
 
 
-def test_salt_block_sizes_preserves_membership(spark):
-    rows = [("hot", f"r{i:03d}") for i in range(100)] + [("cold", "a"), ("cold", "b")]
-    bm = spark.createDataFrame(rows, "block_key string, record_id string")
-    salted = B.salt_block_sizes(bm, salt_threshold=50, n_salts=4)
-    pdf = salted.toPandas()
-    assert len(pdf) == 102
-    hot_keys = {k for k in pdf.block_key if k.startswith("hot#")}
-    assert 1 < len(hot_keys) <= 4
-    assert set(pdf[pdf.block_key == "cold"].record_id) == {"a", "b"}
-
-
 def test_blocking_stats_hand_computed(spark):
     rows = [
         ("tk:a", "r1"), ("tk:a", "r2"), ("tk:a", "r3"),  # one 3-block -> 3 pairs
@@ -87,12 +76,16 @@ def test_tfidf_canopy_rare_tokens_win(spark):
         ("c2", "common common rareword1"),
         ("c3", "common common rareword2"),
         ("c4", "common common rareword2"),
+        # token_stats lowercases: uppercase text keys like its lowercase twin
+        ("c5", "Common COMMON RareWord1"),
     ]
     df = spark.createDataFrame(rows, "conv_id string, conv_text string")
-    keys = B.tfidf_canopy_keys(df, "conv_text", top_m=1, max_df_frac=0.9)
+    _, tf, dfreq = B.token_stats(df, "conv_text")
+    vocab = B.record_token_vocab(tf, dfreq)
+    keys = B.tfidf_canopy_keys_from_vocab(vocab, len(rows), "conv_text", top_m=1, max_df_frac=0.9)
     pdf = keys.toPandas()
     by_rec = dict(zip(pdf.record_id, pdf.block_key))
-    assert by_rec["c1"] == by_rec["c2"]
+    assert by_rec["c1"] == by_rec["c2"] == by_rec["c5"] == "canopy(conv_text):rareword1"
     assert by_rec["c3"] == by_rec["c4"]
     assert by_rec["c1"] != by_rec["c3"]
 

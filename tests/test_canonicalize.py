@@ -83,3 +83,26 @@ def test_turn_collision_total_order_tiebreak(spark):
         # role sorts first among equal (ts, text): 'assistant' < 'user';
         # among equal roles, tool 'aaa-tool' < 'zzz-tool' (nulls last)
         assert (kept[0]["role"], kept[0]["tool"]) == ("assistant", "aaa-tool")
+
+
+def test_one_role_conversations_get_null_side(spark):
+    """A conversation without a user (assistant) turn canonicalizes with a
+    NULL first_user_text (last_assistant_text); a two-role conversation
+    keeps both values."""
+    rows = [
+        ("user_only", 0, "user", "hello there", None, None),
+        ("user_only", 1, "user", "anyone home", None, None),
+        ("asst_only", 0, "assistant", "i can help", None, None),
+        ("both", 0, "user", "first question", None, None),
+        ("both", 1, "assistant", "early answer", None, None),
+        ("both", 2, "user", "second question", None, None),
+        ("both", 3, "assistant", "final answer", None, None),
+    ]
+    t = spark.createDataFrame(rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp")
+    got = {r["conv_id"]: r for r in canonicalize(t).collect()}
+    assert got["user_only"]["first_user_text"] == "hello there"
+    assert got["user_only"]["last_assistant_text"] is None
+    assert got["asst_only"]["first_user_text"] is None
+    assert got["asst_only"]["last_assistant_text"] == "i can help"
+    assert got["both"]["first_user_text"] == "first question"
+    assert got["both"]["last_assistant_text"] == "final answer"

@@ -76,6 +76,28 @@ def test_canonicalize_single_exchange(spark, transcripts_parquet):
     assert n_exchanges == 1, plan
 
 
+def test_index_predicates_add_no_exchange_over_token_stats(spark, fixture_dfs):
+    """Canopy keys and minhash band keys read SparkDedupe._token_stats'
+    persisted frames, which are partitioned by record_id: neither adds an
+    Exchange beyond those inside the cached frame it reads (the minhash
+    k-min aggregate is keyed by record_id, so it rides the cached layout)."""
+    from sparklink import blocking as B
+    from sparklink.pipeline import SparkDedupe
+
+    transcripts, _, _ = fixture_dfs
+    records = canonicalize(transcripts).localCheckpoint(eager=True)
+    dd = SparkDedupe()
+    toks, vocab, n_docs = dd._token_stats(records)
+    try:
+        canopy = B.tfidf_canopy_keys_from_vocab(vocab, n_docs, "conv_text", top_m=4)
+        bands = B.minhash_band_keys_from_tokens(toks)
+        for base, keys in ((vocab, canopy), (toks, bands)):
+            plan = _formatted_plan(keys)
+            assert plan.count("Exchange") == _formatted_plan(base).count("Exchange"), plan
+    finally:
+        dd.release_token_stats()
+
+
 def test_scaling_summary_tolerates_unknown_rung_keys(monkeypatch, tmp_path):
     """r4 ADVICE: an unrecognized rung naming variant must sort last, not
     crash the whole headline summary with ValueError."""

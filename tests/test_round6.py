@@ -87,14 +87,34 @@ def test_tfidf_vocab_path_matches_stats_path(spark):
         assert list(old.loc[rid, "tfw"]) == list(new.loc[rid, "tfw"]), rid
 
 
+def _canopy_keys_windowed(tf, dfreq, n_docs: int, column_label: str, top_m: int = 3, max_df_frac: float = 0.2):
+    """Reference for tfidf_canopy_keys_from_vocab: the window-ranked form
+    the engine used before the per-record vocab (df-bounded join, then a
+    row_number window over (w desc, token asc) per record)."""
+    from pyspark.sql import Window
+
+    d = dfreq.filter((F.col("df") >= 1) & (F.col("df") <= int(max(1, max_df_frac * n_docs))))
+    scored = tf.join(F.broadcast(d), "token").withColumn(
+        "w", F.col("tf") * F.log(F.lit(float(n_docs + 1)) / (F.col("df") + 1.0))
+    )
+    w = Window.partitionBy("record_id").orderBy(F.desc("w"), F.asc("token"))
+    return (
+        scored.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= top_m)
+        .select(
+            F.concat(F.lit(f"canopy({column_label})"), F.lit(":"), F.col("token")).alias("block_key"), "record_id"
+        )
+    )
+
+
 def test_canopy_vocab_path_matches_stats_path(spark):
-    from sparklink.blocking import record_token_vocab, tfidf_canopy_keys_from_stats, tfidf_canopy_keys_from_vocab
+    from sparklink.blocking import record_token_vocab, tfidf_canopy_keys_from_vocab
 
     recs, tf, dfreq = _stats(spark)
     n = recs.count()
     old = {
         (r["block_key"], r["record_id"])
-        for r in tfidf_canopy_keys_from_stats(tf, dfreq, n, "conv_text", top_m=2).collect()
+        for r in _canopy_keys_windowed(tf, dfreq, n, "conv_text", top_m=2).collect()
     }
     vocab = record_token_vocab(tf, dfreq)
     new = {

@@ -57,6 +57,14 @@ def test_build_pyfiles_is_deterministic(tmp_path):
     assert not [n for n in names if "__pycache__" in n or n.endswith(".pyc")]
 
 
+def test_committed_pyfiles_zip_matches_fresh_build(tmp_path):
+    """The committed dist/sparklink.zip is a build of the current tree.
+    Rebuild it (bash tools/build_pyfiles.sh) whenever its sources change."""
+    fresh = _build_pyfiles(str(tmp_path / "sparklink.zip"))
+    with open(fresh, "rb") as f1, open(os.path.join(REPO, "dist", "sparklink.zip"), "rb") as f2:
+        assert f1.read() == f2.read(), "dist/sparklink.zip is stale: run bash tools/build_pyfiles.sh"
+
+
 def test_spark_submit_pyfiles_end_to_end(tmp_path):
     zip_path = _build_pyfiles(str(tmp_path / "sparklink.zip"))
 
