@@ -30,70 +30,27 @@ from pyspark.sql.functions import pandas_udf
 
 
 def _dot(a, b):
+    """The one dot product: a left-to-right fold over the element products,
+    0.0 + a[0]*b[0] + ... — the same IEEE order as the SQL oracles'
+    list_sum, so rounded scores match them bit for bit. Ragged pairs give
+    NULL (zip_with pads the shorter side with NULLs)."""
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
 
 
-# expansion cap: the chain is a dim-deep nested Add tree — fine for
-# embedding dims up to ~128, but a 512-term chain overflows the JVM stack
-# during Column conversion and bloats the plan string (the constant-plan
-# guard of test_lsh_production_planes_plan_size); larger dims keep the
-# interpreted fold, whose per-element cost matters less as compute per
-# row grows with dim anyway
-_EXPAND_DIM_CAP = 128
-
-
-def _dot_fixed(a, b, dim: int | None):
-    """The same left-to-right dot fold as ``_dot``, expanded to ``dim``
-    explicit terms when both arrays have exactly ``dim`` elements.
-
-    Bit-identical arithmetic (0.0 + a[0]*b[0] + ... in the fold's IEEE
-    order), but the expanded chain runs in whole-stage codegen while the
-    higher-order aggregate/zip_with fold is interpreted per element
-    (guide §4.1: prefer expressions codegen can compile). The size guard
-    keeps exact parity — and ANSI safety — for ragged inputs, which fall
-    back to the fold; dim=None (or dim past _EXPAND_DIM_CAP) is the
-    plain fold."""
-    if not dim or dim > _EXPAND_DIM_CAP:
-        return _dot(a, b)
-    acc = F.lit(0.0)
-    for i in range(dim):
-        acc = acc + a[i] * b[i]
-    return F.when((F.size(a) == dim) & (F.size(b) == dim), acc).otherwise(_dot(a, b))
-
-
-def _norm(a):
-    return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v))
-
-
-def with_unit_vectors(
-    emb: DataFrame, vec_col: str = "embedding", out_col: str = "unit", dim: int | None = None
-) -> DataFrame:
+def with_unit_vectors(emb: DataFrame, vec_col: str = "embedding", out_col: str = "unit") -> DataFrame:
     """+ ``out_col`` = L2-normalized copy of ``vec_col`` (doubles).
 
-    With ``dim`` given, the norm is the expanded codegen fold and the
-    division runs over a BOUND norm attribute: the lambda form
-    ``transform(v, x -> x / n)`` re-evaluates the whole norm fold once per
-    element (the documented higher-order-function inlining trap — O(dim^2)
-    interpreted work per row); binding the norm as a projected column and
-    referencing it ``dim`` times blocks Project collapse (a non-cheap
-    producer with many references is not inlined) so it is computed once
-    per row. Values are bit-identical to the lambda form — same divisions,
-    same fold order."""
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    if not dim or dim > _EXPAND_DIM_CAP:
-        n = _norm(v)
-        return emb.withColumn(out_col, F.when(n > 0, F.transform(v, lambda x: x / n)).otherwise(v))
-    vv = F.col("__v")
+    The cast vector and its norm are bound as columns (``__v``, ``__n``).
+    ``__n`` has two references, so Catalyst does not collapse it into the
+    division lambda: the norm fold runs once per row, not once per element
+    (the higher-order-function inlining trap of ``transform(v, x -> x /
+    norm(v))``). A zero vector stays as it is."""
+    v = F.col("__v")
     n = F.col("__n")
-    expanded = F.array(*[vv[i] / n for i in range(dim)])
-    fallback = F.transform(vv, lambda x: x / n)
-    unit = F.when(
-        n > 0, F.when(F.size(vv) == dim, expanded).otherwise(fallback)
-    ).otherwise(vv)
     return (
-        emb.withColumn("__v", v)
-        .withColumn("__n", F.sqrt(_dot_fixed(vv, vv, dim)))
-        .withColumn(out_col, unit)
+        emb.withColumn("__v", F.transform(F.col(vec_col), lambda x: x.cast("double")))
+        .withColumn("__n", F.sqrt(_dot(v, v)))
+        .withColumn(out_col, F.when(n > 0, F.transform(v, lambda x: x / n)).otherwise(v))
         .drop("__v", "__n")
     )
 
@@ -108,16 +65,10 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact cosine top-k: (query_id, vec_id, cos, rank). queries must be
     small enough to broadcast (it is the probe set, not the corpus)."""
-    # peek the dimension from one query row (the small probe side — a
-    # trivial job) so normalization and the per-pair dot run as expanded
-    # codegen chains instead of interpreted per-element folds; an empty
-    # or ragged probe set falls back to the fold path with identical values
-    head = queries.select(vec_col).head(1)
-    dim = len(head[0][0]) if head and head[0][0] is not None else None
-    c = with_unit_vectors(corpus, vec_col, dim=dim).select(F.col(id_col), F.col("unit").alias("cu"))
-    q = with_unit_vectors(queries, vec_col, dim=dim).select(F.col(query_id_col), F.col("unit").alias("qu"))
+    c = with_unit_vectors(corpus, vec_col).select(F.col(id_col), F.col("unit").alias("cu"))
+    q = with_unit_vectors(queries, vec_col).select(F.col(query_id_col), F.col("unit").alias("qu"))
     scored = c.join(F.broadcast(q)).filter(F.col(id_col) != F.col(query_id_col)).select(
-        query_id_col, id_col, F.round(_dot_fixed(F.col("cu"), F.col("qu"), dim), 6).alias("cos")
+        query_id_col, id_col, F.round(_dot(F.col("cu"), F.col("qu")), 6).alias("cos")
     )
     w = Window.partitionBy(query_id_col).orderBy(F.desc("cos"), F.asc(id_col))
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
@@ -158,13 +109,12 @@ def _with_buckets(df: DataFrame, unit_col: str, planes, bands: int | None = None
     normalization, so raw data-derived planes work; dot rounded to 6dp
     before the sign test so an oracle engine computing the same double
     arithmetic lands on the same bucket."""
-    dim = len(planes[0]) if len(planes) else None
     j = df.join(F.broadcast(_planes_df(df.sparkSession, planes, bands)))
     bits = F.transform(
         F.col("pmat"),
         lambda s: F.struct(
             s["band"].alias("band"),
-            F.when(F.round(_dot_fixed(F.col(unit_col), s["pv"], dim), 6) >= 0, s["bit"]).otherwise(F.lit(0).cast("bigint")).alias("v"),
+            F.when(F.round(_dot(F.col(unit_col), s["pv"]), 6) >= 0, s["bit"]).otherwise(F.lit(0).cast("bigint")).alias("v"),
         ),
     )
     if bands is None:
@@ -222,13 +172,12 @@ def lsh_topk(
     overrides the seeded hyperplanes (e.g. data_planes for oracle parity)."""
     if planes is None:
         planes = _hyperplanes(dim, n_planes, seed)
-    pdim = len(planes[0]) if len(planes) else None
-    c = with_unit_vectors(corpus, vec_col, dim=pdim).select(F.col(id_col), F.col("unit").alias("cu"))
+    c = with_unit_vectors(corpus, vec_col).select(F.col(id_col), F.col("unit").alias("cu"))
     c = _with_buckets(c, "cu", planes)
-    q = with_unit_vectors(queries, vec_col, dim=pdim).select(F.col(query_id_col), F.col("unit").alias("qu"))
+    q = with_unit_vectors(queries, vec_col).select(F.col(query_id_col), F.col("unit").alias("qu"))
     q = _with_buckets(q, "qu", planes)
     scored = c.join(F.broadcast(q), "bucket").filter(F.col(id_col) != F.col(query_id_col)).select(
-        query_id_col, id_col, F.round(_dot_fixed(F.col("cu"), F.col("qu"), pdim), 6).alias("cos")
+        query_id_col, id_col, F.round(_dot(F.col("cu"), F.col("qu")), 6).alias("cos")
     )
     w = Window.partitionBy(query_id_col).orderBy(F.desc("cos"), F.asc(id_col))
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
@@ -245,9 +194,7 @@ def neardup_buckets(
     the stage boundary of ``cosine_neardup_pairs``. Materialize this
     frame once (parquet/checkpoint) and pass it as ``buckets`` when the
     corpus is large; the pair plan reads it three times."""
-    c = with_unit_vectors(corpus, vec_col, dim=len(planes[0]) if len(planes) else None).select(
-        F.col(id_col), F.col("unit").alias("cu")
-    )
+    c = with_unit_vectors(corpus, vec_col).select(F.col(id_col), F.col("unit").alias("cu"))
     return _with_buckets(c, "cu", planes, bands=bands, out_col="bk").select(id_col, "cu", "bk")
 
 
@@ -294,7 +241,7 @@ def cosine_neardup_pairs(
         .select("id_a", "id_b", "ua", "ub")
         .dropDuplicates(["id_a", "id_b"])
     )
-    cos = F.round(_dot_fixed(F.col("ua"), F.col("ub"), len(planes[0]) if len(planes) else None), 6)
+    cos = F.round(_dot(F.col("ua"), F.col("ub")), 6)
     return pairs.select("id_a", "id_b", cos.alias("cos")).filter(F.col("cos") >= threshold)
 
 
@@ -307,13 +254,13 @@ def _centroid_matrix_df(spark, cents: np.ndarray) -> DataFrame:
     return spark.createDataFrame([(d,) for d in data], "cmat array<struct<cell:int,cv:array<double>>>")
 
 
-def _cell_scores(unit_col, cmat_col, dim: int | None = None):
+def _cell_scores(unit_col, cmat_col):
     # array<struct<d,i>>: dot vs every centroid, rounded to 6dp. The dot
-    # keeps the fold's arithmetic order (expanded when dim is known), so
-    # the rounded value is bit-identical to the SQL oracle's list_sum fold.
+    # is the fold, so the rounded value is bit-identical to the SQL
+    # oracle's list_sum.
     return F.transform(
         cmat_col,
-        lambda s: F.struct(F.round(_dot_fixed(unit_col, s["cv"], dim), 6).alias("d"), s["cell"].alias("i")),
+        lambda s: F.struct(F.round(_dot(unit_col, s["cv"]), 6).alias("d"), s["cell"].alias("i")),
     )
 
 
@@ -377,7 +324,7 @@ def assign_cells(
     j = df.join(F.broadcast(cm))
     zero = F.struct(F.lit(float("-inf")).alias("d"), F.lit(-1).alias("i"))
     best = F.aggregate(
-        _cell_scores(F.col(unit_col), F.col("cmat"), dim=int(np.asarray(cents).shape[1])),
+        _cell_scores(F.col(unit_col), F.col("cmat")),
         zero,
         lambda acc, s: F.when(s["d"] > acc["d"], s).otherwise(acc),
     )
@@ -411,9 +358,7 @@ def rank_cells(
 
         return df.withColumn(out_col, _rank(F.col(unit_col)))
     cm = _centroid_matrix_df(df.sparkSession, cents)
-    j = df.join(F.broadcast(cm)).withColumn(
-        "_cs", _cell_scores(F.col(unit_col), F.col("cmat"), dim=int(np.asarray(cents).shape[1]))
-    )
+    j = df.join(F.broadcast(cm)).withColumn("_cs", _cell_scores(F.col(unit_col), F.col("cmat")))
     ranked = F.slice(F.transform(F.array_sort(F.col("_cs"), _CELL_CMP), lambda s: s["i"]), 1, n_probe)
     return j.withColumn(out_col, ranked).drop("cmat", "_cs")
 
@@ -480,15 +425,14 @@ def ivf_topk(
     only its n_probe nearest cells. Centroids travel as broadcast data
     (assign_cells/rank_cells), never plan literals — plan size is O(1) in
     the codebook; method='pandas' for production n_cells x dim."""
-    cdim = int(np.asarray(cents).shape[1])
-    c = with_unit_vectors(corpus, vec_col, dim=cdim).select(F.col(id_col), F.col("unit").alias("cu"))
+    c = with_unit_vectors(corpus, vec_col).select(F.col(id_col), F.col("unit").alias("cu"))
     c = assign_cells(c, cents, unit_col="cu", method=method)
-    q = with_unit_vectors(queries, vec_col, dim=cdim).select(F.col(query_id_col), F.col("unit").alias("qu"))
+    q = with_unit_vectors(queries, vec_col).select(F.col(query_id_col), F.col("unit").alias("qu"))
     q = rank_cells(q, cents, unit_col="qu", n_probe=n_probe, method=method).select(
         query_id_col, "qu", F.explode("cells").alias("cell")
     )
     scored = c.join(F.broadcast(q), "cell").filter(F.col(id_col) != F.col(query_id_col)).select(
-        query_id_col, id_col, F.round(_dot_fixed(F.col("cu"), F.col("qu"), cdim), 6).alias("cos")
+        query_id_col, id_col, F.round(_dot(F.col("cu"), F.col("qu")), 6).alias("cos")
     )
     w = Window.partitionBy(query_id_col).orderBy(F.desc("cos"), F.asc(id_col))
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k).dropDuplicates([query_id_col, id_col])

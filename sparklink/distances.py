@@ -22,8 +22,6 @@ is on cluster decisions, with the LR weights fit to labeled pairs
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
@@ -39,7 +37,7 @@ from sparklink.session import session_expr
 # Blocking to ~1k rows keeps the working set (~1-2 MB) cache-resident,
 # and sorting rows by length first lets each block's DP loop stop at
 # the block's own max string length instead of the batch max.
-_DP_CHUNK = int(os.environ.get("SPARKLINK_DP_CHUNK", "1024"))
+_DP_CHUNK = 1024
 
 # --------------------------------------------------------------------------
 # batch string encoding
@@ -64,11 +62,11 @@ def _encode(s: pd.Series, max_len: int) -> tuple[np.ndarray, np.ndarray]:
 def _trim_common(ca: np.ndarray, la: np.ndarray, cb: np.ndarray, lb: np.ndarray):
     """Strip the common prefix and suffix of each row pair (in code space).
 
-    Exact for Levenshtein; the standard practical reduction for affine-gap
-    (weights are refit against the comparator, SURVEY §2.6 note). Returns
-    new (ca, la, cb, lb); rows become left-aligned slices of the middles.
-    Candidate near-duplicate pairs share long prefixes, so this removes
-    most DP work.
+    The standard practical reduction for affine-gap (weights are refit
+    against the comparator, SURVEY §2.6 note). Returns new (ca, la, cb,
+    lb); rows become left-aligned slices of the middles. Candidate
+    near-duplicate pairs share long prefixes, so this removes most DP
+    work.
     """
     B, L = ca.shape
     if B == 0:
@@ -96,7 +94,7 @@ def _trim_common(ca: np.ndarray, la: np.ndarray, cb: np.ndarray, lb: np.ndarray)
     return ga, na.astype(np.int32), gb, nb.astype(np.int32)
 
 
-def _length_blocks(la: np.ndarray, lb: np.ndarray, chunk: int = 0):
+def _length_blocks(la: np.ndarray, lb: np.ndarray):
     """Yield (row_indices, block_max_len) cache blocks for the DP kernels.
 
     Rows are sorted by max(la, lb) so each block is length-homogeneous:
@@ -106,17 +104,16 @@ def _length_blocks(la: np.ndarray, lb: np.ndarray, chunk: int = 0):
     row-independent and left-to-right in the column index, so dropping
     columns beyond the block max and regrouping rows changes no value.
     """
-    chunk = chunk or _DP_CHUNK
     B = len(la)
     if B == 0:
         return
     key = np.maximum(la, lb)
-    if B <= chunk:
+    if B <= _DP_CHUNK:
         yield np.arange(B), int(key.max())
         return
     order = np.argsort(key, kind="stable")
-    for s in range(0, B, chunk):
-        idx = order[s : s + chunk]
+    for s in range(0, B, _DP_CHUNK):
+        idx = order[s : s + _DP_CHUNK]
         yield idx, int(key[idx[-1]])
 
 
@@ -132,54 +129,6 @@ def _equal_fastpath(a: pd.Series, b: pd.Series, equal_value: float, core) -> np.
         idx = np.nonzero(neq)[0]
         out[idx] = core(pd.Series(av[idx]), pd.Series(bv[idx]))
     return out
-
-
-# --------------------------------------------------------------------------
-# Levenshtein (normalized distance in [0,1])
-# --------------------------------------------------------------------------
-
-
-def levenshtein(a: pd.Series, b: pd.Series, max_len: int = 64) -> np.ndarray:
-    return _equal_fastpath(a, b, 0.0, lambda x, y: _levenshtein_core(x, y, max_len))
-
-
-def _levenshtein_core(a: pd.Series, b: pd.Series, max_len: int = 64) -> np.ndarray:
-    ca, la = _encode(a, max_len)
-    cb, lb = _encode(b, max_len)
-    B = len(la)
-    if B == 0:
-        return np.zeros(0)
-    la0, lb0 = la, lb  # normalize by original lengths
-    ca, la, cb, lb = _trim_common(ca, la, cb, lb)
-    d = np.zeros(B, dtype=np.float32)
-    for idx, m in _length_blocks(la, lb):
-        if m:  # m == 0: both middles empty -> distance 0
-            d[idx] = _lev_block(ca[idx, :m], la[idx], cb[idx, :m], lb[idx], m)
-    # final division in float64: d and denom are exact small integers, so
-    # the normalized distance is the exact rational — bit-identical to any
-    # other engine computing levenshtein(a,b)/max(len) (oracle parity)
-    denom = np.maximum(np.maximum(la0, lb0), 1).astype(np.float64)
-    return np.clip(d.astype(np.float64) / denom, 0.0, 1.0)
-
-
-def _lev_block(ca: np.ndarray, la: np.ndarray, cb: np.ndarray, lb: np.ndarray, L: int) -> np.ndarray:
-    B = len(la)
-    j_idx = np.arange(L + 1, dtype=np.float32)
-    prev = np.broadcast_to(j_idx, (B, L + 1)).copy()
-    for i in range(1, L + 1):
-        active = la >= i
-        if not active.any():
-            break
-        cost = (ca[:, i - 1 : i] != cb).astype(np.float32)  # (B, L)
-        tmp = np.empty((B, L + 1), dtype=np.float32)
-        tmp[:, 0] = i
-        tmp[:, 1:] = np.minimum(prev[:, 1:] + 1.0, prev[:, :-1] + cost)
-        # cur[j] = min_k<=j (tmp[k] + (j-k))  -> prefix-min scan
-        cur = np.minimum.accumulate(tmp - j_idx, axis=1) + j_idx
-        prev = np.where(active[:, None], cur, prev)
-    # after the loop `prev` holds, per block row, the DP row for i=la
-    # (rows freeze once i exceeds their length); answer is column lb.
-    return prev[np.arange(B), lb]
 
 
 # --------------------------------------------------------------------------
@@ -350,6 +299,17 @@ def _affine_block(
 # --------------------------------------------------------------------------
 # Column-expression comparators (pure JVM, codegen'd)
 # --------------------------------------------------------------------------
+
+
+def levenshtein_distance(l: Column, r: Column, max_len: int = 64) -> Column:
+    """Normalized Levenshtein distance in [0,1]: edits / max(len_l, len_r, 1)
+    over the first ``max_len`` characters, NULL read as ''. Spark's
+    levenshtein built-in — no Arrow hop, no Python worker. The quotient of
+    two exact small integers is the exact rational any engine computes, so
+    values match DuckDB's levenshtein()/greatest(length) bit for bit."""
+    tl = F.substring(F.coalesce(l, F.lit("")), 1, max_len)
+    tr = F.substring(F.coalesce(r, F.lit("")), 1, max_len)
+    return F.levenshtein(tl, tr).cast("double") / F.greatest(F.length(tl), F.length(tr), F.lit(1)).cast("double")
 
 
 def exact_cmp(l: Column, r: Column) -> Column:

@@ -268,17 +268,10 @@ class SparkGazetteer:
 
         assert self._index is not None, "call index(canonical) first"
         bm_messy = B.cap_block_sizes(B.build_blocking_map(messy_records, self.predicates), self.max_block_size)
-        if self.broadcast_messy:
-            # the messy side is a delta batch probing a (potentially
-            # 100 TB) index: broadcast its keys so the index is never
-            # shuffled by the candidate join (guide §3.1)
-            bm_messy = F.broadcast(bm_messy)
-        cand = (
-            bm_messy.withColumnRenamed("record_id", "id_a")
-            .join(self._index.withColumnRenamed("record_id", "id_b"), "block_key")
-            .select("id_a", "id_b")
-            .dropDuplicates(["id_a", "id_b"])
-        )
+        # the messy side is a delta batch probing a (potentially 100 TB)
+        # index: broadcast its keys so the index is never shuffled by the
+        # candidate join (guide §3.1); the hint survives the projection
+        cand = P.candidate_pairs_cross(F.broadcast(bm_messy) if self.broadcast_messy else bm_messy, self._index)
         dd = self._dd()
         # messy-side payload only: fresh tf over the delta, weighted by the
         # STAGED canonical df / corpus size — no canonical-side job

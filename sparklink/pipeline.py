@@ -82,8 +82,6 @@ def default_transcript_predicates() -> list[B.Predicate]:
 class SparkDedupe:
     model: FieldModel = field(default_factory=default_transcript_model)
     predicates: list[B.Predicate] = field(default_factory=default_transcript_predicates)
-    use_canopy: bool = True
-    use_minhash: bool = True
     max_block_size: int = 200
     threshold: float = 0.5
     # hierarchical refinement within components (reference cluster()
@@ -167,19 +165,13 @@ class SparkDedupe:
     def blocking_map(self, records: DataFrame) -> DataFrame:
         def thunk():
             bm = B.build_blocking_map(records, self.predicates)
-            if self.use_canopy or self.use_minhash:
-                toks, vocab, n_docs = self._token_stats(records)
-                if self.use_canopy:
-                    bm = bm.unionByName(
-                        B.tfidf_canopy_keys_from_vocab(vocab, n_docs, "conv_text", top_m=4)
-                    )
-                if self.use_minhash:
-                    # recall backstop: hard-noised members can lose
-                    # first-turn tokens entirely, defeating prefix/token
-                    # predicates, and canopy keys of common tokens die at
-                    # the block cap; minhash bands key on whole-text
-                    # word-shingle similarity instead
-                    bm = bm.unionByName(B.minhash_band_keys_from_tokens(toks))
+            toks, vocab, n_docs = self._token_stats(records)
+            bm = bm.unionByName(B.tfidf_canopy_keys_from_vocab(vocab, n_docs, "conv_text", top_m=4))
+            # recall backstop: hard-noised members can lose first-turn
+            # tokens entirely, defeating prefix/token predicates, and
+            # canopy keys of common tokens die at the block cap; minhash
+            # bands key on whole-text word-shingle similarity instead
+            bm = bm.unionByName(B.minhash_band_keys_from_tokens(toks))
             # cap_block_sizes reads its input twice (skew-safe sizes agg +
             # anti-join probe); persist the uncapped map so the explode-
             # heavy predicate/canopy/band plan above is evaluated ONCE
@@ -192,8 +184,6 @@ class SparkDedupe:
 
         params = {
             "preds": [p.pid for p in self.predicates],
-            "canopy": self.use_canopy,
-            "minhash": self.use_minhash,
             "cap": self.max_block_size,
             "upstream": self._upstream("records"),
         }
@@ -280,11 +270,7 @@ class SparkDedupe:
         # (guide §2.4: check for Exchange nodes you did not expect). The
         # scorer-stage parallelism it was buying is preserved by AQE's
         # parallelismFirst coalescing (post-join partitions target
-        # defaultParallelism, not advisory bytes); SPARK_GRAFT_PAIR_PARTITIONS
-        # still forces an explicit spread when set.
-        n_pair_parts = os.environ.get("SPARK_GRAFT_PAIR_PARTITIONS")
-        if n_pair_parts:
-            pairs = pairs.repartition(int(n_pair_parts), "id_a", "id_b")
+        # defaultParallelism, not advisory bytes).
         text_vars = [v for v in self.model.variables if v.kind == "text"]
         cached = getattr(self, "_tf_cache", None)
         vecs_by_col = {}
@@ -683,8 +669,6 @@ class SparkDedupe:
         batch = SparkDedupe(
             model=self.model,
             predicates=self.predicates,
-            use_canopy=self.use_canopy,
-            use_minhash=self.use_minhash,
             max_block_size=self.max_block_size,
             threshold=t,
             refine=self.refine,

@@ -370,21 +370,19 @@ FROM pairs p JOIN t a ON p.id_a = a.conv_id JOIN t b ON p.id_b = b.conv_id
 """,
 )
 def er_pair_levenshtein(spark, sf_dir):
-    """Cross-engine validation of the vectorized Levenshtein KERNEL itself
-    (distances._levenshtein_core, the batch DP with prefix-min scan):
-    normalized edit distance of candidate pairs' first_user_text must
-    hash-match DuckDB's native levenshtein()/max(len) — value-level parity
-    for the scorer's hot-path numpy DP, not just pytest scalar spot
-    checks."""
-    from sparklink.score import levenshtein_udf
+    """Cross-engine validation of the production ``kind='levenshtein'``
+    comparator (distances.levenshtein_distance): the normalized edit
+    distance of every blocked candidate pair's first_user_text must
+    hash-match DuckDB's native levenshtein()/max(len) over the same
+    64-char prefixes, NULL read as ''."""
+    from sparklink.distances import levenshtein_distance
 
     recs = er_records(spark, sf_dir)
     pairs = candidate_pairs(build_blocking_map(recs, ER_PREDICATES).localCheckpoint(eager=True))
-    t = recs.select("conv_id", F.substring(F.coalesce("first_user_text", F.lit("")), 1, 64).alias("t64"))
-    a = t.select(F.col("conv_id").alias("id_a"), F.col("t64").alias("ta"))
-    b = t.select(F.col("conv_id").alias("id_b"), F.col("t64").alias("tb"))
+    a = recs.select(F.col("conv_id").alias("id_a"), F.col("first_user_text").alias("ta"))
+    b = recs.select(F.col("conv_id").alias("id_b"), F.col("first_user_text").alias("tb"))
     j = pairs.join(a, "id_a").join(b, "id_b")
-    return j.select("id_a", "id_b", F.round(levenshtein_udf("ta", "tb"), 6).alias("lev_dist"))
+    return j.select("id_a", "id_b", F.round(levenshtein_distance(F.col("ta"), F.col("tb")), 6).alias("lev_dist"))
 
 
 @q(
@@ -1374,13 +1372,15 @@ def er_name_scores(spark, sf_dir):
     component. Name pairs cover all four surface forms plus deliberate
     canonical-name mismatches (doc_id%3==0 pairs a nick with a DIFFERENT
     canonical name) so first_sim varies. Comparator here is the
-    normalized-Levenshtein kernel (exact cross-engine rational parity, as
-    er_pair_levenshtein); the production name variable uses Jaro-Winkler,
-    whose unconditional-prefix-boost variant has no DuckDB built-in twin —
+    normalized Levenshtein (distances.levenshtein_distance; exact
+    cross-engine rational parity, as er_pair_levenshtein); the production
+    name variable uses Jaro-Winkler, whose unconditional-prefix-boost
+    variant has no DuckDB built-in twin —
     that kernel is differential-tested in pytest instead
     (test_distance_properties.py)."""
     from sparklink.preprocess import tokens
-    from sparklink.score import _NICKNAMES, _canonical_first, _middle_score, _name_components, levenshtein_udf
+    from sparklink.distances import levenshtein_distance
+    from sparklink.score import _NICKNAMES, _canonical_first, _middle_score, _name_components
 
     items = sorted(_NICKNAMES.items())
     n = len(items)
@@ -1413,11 +1413,15 @@ def er_name_scores(spark, sf_dir):
         )
         .otherwise(F.concat(F.col("tok1"), F.lit(", "), F.col("canon_b"), F.lit(" "), F.col("tok2")))
     )
+    # the components are bound as columns: each feeds several comparisons,
+    # and levenshtein_distance reads its inputs twice, so an inlined regex
+    # chain would run once per reference instead of once per row
     named = b.select("doc_id", name_a.alias("name_a"), name_b.alias("name_b"))
-    ca, cb = _name_components(F.col("name_a")), _name_components(F.col("name_b"))
+    named = named.withColumns({"ca": _name_components(F.col("name_a")), "cb": _name_components(F.col("name_b"))})
+    ca, cb = F.col("ca"), F.col("cb")
 
     def lev_sim(x, y):
-        return F.round(1.0 - levenshtein_udf(x, y), 6)
+        return F.round(1.0 - levenshtein_distance(x, y), 6)
 
     return named.select(
         "doc_id",

@@ -1,7 +1,8 @@
-"""Hypothesis property tests for the batch string-distance kernels —
-randomized differential checks against naive per-pair references, plus
-metric properties (identity, symmetry, bounds). No Spark session needed;
-kernels are the same numpy batch code the scorer's pandas UDF runs.
+"""Property tests for the string distances — randomized differential
+checks against naive per-pair references, plus metric properties
+(identity, symmetry, bounds). The hypothesis tests drive the numpy batch
+kernels the scorer's pandas UDF runs, with no Spark session; the
+Column-side Levenshtein gets one seeded random batch in one Spark job.
 """
 
 from __future__ import annotations
@@ -10,13 +11,15 @@ import numpy as np
 import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
-from sparklink.distances import affine_gap, jaro_winkler, levenshtein
+from sparklink.distances import affine_gap, jaro_winkler, levenshtein_distance
 
 # small alphabet forces prefix overlaps, transpositions, and repeats —
 # the regimes where DP kernels break; short strings keep the naive
 # references O(n^2)-cheap
-WORD = st.text(alphabet="abcz ", min_size=0, max_size=12)
+ALPHABET = "abcz "
+WORD = st.text(alphabet=ALPHABET, min_size=0, max_size=12)
 
 
 def _lev_ref(a: str, b: str) -> float:
@@ -67,14 +70,15 @@ def _jaro_ref(a: str, b: str, prefix_scale: float = 0.1) -> float:
     return jaro + p * prefix_scale * (1 - jaro)
 
 
-@settings(max_examples=200, deadline=None)
-@given(st.lists(st.tuples(WORD, WORD), min_size=1, max_size=8))
-def test_levenshtein_matches_naive_dp(pairs):
-    a = pd.Series([p[0] for p in pairs])
-    b = pd.Series([p[1] for p in pairs])
-    got = levenshtein(a, b)
-    want = np.array([_lev_ref(x, y) for x, y in pairs])
-    np.testing.assert_allclose(got, want, atol=1e-9)
+def test_levenshtein_matches_naive_dp(spark):
+    """The same regime as the hypothesis tests (small alphabet, <= 12
+    chars), drawn once from a seeded generator so it costs one Spark job."""
+    rng = np.random.default_rng(3)
+    word = lambda: "".join(rng.choice(list(ALPHABET), size=int(rng.integers(0, 13))))  # noqa: E731
+    pairs = [(word(), word()) for _ in range(1000)]
+    df = spark.createDataFrame([(i, a, b) for i, (a, b) in enumerate(pairs)], "i int, l string, r string")
+    got = dict(df.select("i", levenshtein_distance(F.col("l"), F.col("r"))).collect())
+    assert [got[i] for i in range(len(pairs))] == [_lev_ref(a, b) for a, b in pairs]
 
 
 @settings(max_examples=200, deadline=None)
@@ -94,11 +98,10 @@ def test_jaro_winkler_matches_naive(pairs):
 @given(WORD, WORD)
 def test_metric_properties(x, y):
     sx, sy = pd.Series([x, y, x]), pd.Series([y, x, x])
-    for fn, ident in ((levenshtein, 0.0), (affine_gap, 0.0)):
-        d = fn(sx, sy)
-        assert 0.0 <= d[0] <= 1.0
-        assert abs(d[0] - d[1]) < 1e-5  # symmetry
-        assert abs(d[2] - ident) < 1e-7  # identity
+    d = affine_gap(sx, sy)
+    assert 0.0 <= d[0] <= 1.0
+    assert abs(d[0] - d[1]) < 1e-5  # symmetry
+    assert abs(d[2]) < 1e-7  # identity
     jw = jaro_winkler(sx, sy)
     assert 0.0 <= jw[0] <= 1.0
     assert abs(jw[0] - jw[1]) < 1e-6

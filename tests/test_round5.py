@@ -131,37 +131,6 @@ def test_ngram_accepts_staged_candidates(spark):
 # JVM-native levenshtein comparator (r4 VERDICT #4)
 # ---------------------------------------------------------------------------
 
-_LEV_CASES = [
-    ("kitten", "sitting"),
-    ("", ""),
-    ("a", ""),
-    ("", "abc"),
-    ("abc", "abc"),
-    ("café", "cafe"),
-    ("naïve résumé", "naive resume"),
-    ("x" * 80, "x" * 79 + "y"),  # both truncate to the same 64-char prefix
-    ("the quick brown fox", "the quack brown fax"),
-    ("short", "a much much longer string than the other side"),
-]
-
-
-def test_levenshtein_expr_matches_kernel(spark):
-    """The pure-Column comparator must compute the identical normalized
-    rational as the numpy DP kernel (which er_pair_levenshtein proves
-    equal to DuckDB's native levenshtein)."""
-    from sparklink.distances import levenshtein
-
-    a = pd.Series([c[0][:64] for c in _LEV_CASES])
-    b = pd.Series([c[1][:64] for c in _LEV_CASES])
-    kernel_sim = 1.0 - levenshtein(a, b)
-    df = spark.createDataFrame(list(zip(a, b)), "l string, r string")
-    tl, tr = F.substring("l", 1, 64), F.substring("r", 1, 64)
-    expr = 1.0 - F.levenshtein(tl, tr).cast("double") / F.greatest(
-        F.length(tl), F.length(tr), F.lit(1)
-    ).cast("double")
-    got = [r.s for r in df.select(expr.alias("s")).collect()]
-    assert np.allclose(got, kernel_sim, atol=1e-12)
-
 
 def test_levenshtein_only_model_has_no_arrow_stage(spark):
     """A model using only Column-expressible kinds must keep the whole

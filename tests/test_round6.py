@@ -161,25 +161,6 @@ def test_refine_components_bucketed_many_components(spark):
         assert out[c] != out[a]
 
 
-def test_dot_expansion_matches_fold(spark):
-    """_dot_fixed must equal _dot bit-for-bit on exact-dim rows and fall
-    back identically on ragged rows."""
-    from sparklink.ann import _dot, _dot_fixed
-
-    rows = [
-        ([0.1, 0.2, 0.3, 0.4], [0.4, 0.3, 0.2, 0.1]),
-        ([1.0, -1.0, 2.0, -2.0], [0.5, 0.25, -0.125, 3.0]),
-        ([0.1, 0.2], [0.3, 0.4]),  # ragged: falls back to the fold
-    ]
-    df = spark.createDataFrame(rows, "a array<double>, b array<double>")
-    got = df.select(
-        _dot(F.col("a"), F.col("b")).alias("fold"),
-        _dot_fixed(F.col("a"), F.col("b"), 4).alias("fixed"),
-    ).collect()
-    for r in got:
-        assert r["fold"] == r["fixed"]
-
-
 def test_gazetteer_search_without_canonical_corpus(spark, tmp_path):
     """VERDICT r5 #1 done-criterion: after load_index from a catalog, the
     search path must run ENTIRELY from the staged tables — no job over the

@@ -1,8 +1,8 @@
 """Microbenchmark for the DP string-comparator kernels (distances.py).
 
-Measures rows/sec for affine_gap / levenshtein / jaro_winkler on a
-synthetic near-duplicate batch, single-process pinned to 1 core and
-in P pinned worker processes (1 core each), reporting the wall scaling
+Measures rows/sec for affine_gap / jaro_winkler on a synthetic
+near-duplicate batch, single-process pinned to 1 core and in P pinned
+worker processes (1 core each), reporting the wall scaling
 efficiency 1->P. The kernels are the hot path of the scoring stage; if
 they are DRAM-bandwidth-bound the parallel legs inflate, which shows up
 directly in the north_rule local[N] vs local[4N] reading.
@@ -54,7 +54,6 @@ def _run_kernels(args) -> dict:
     D.affine_gap(a[:512], b[:512])
     for name, fn in (
         ("affine_gap", D.affine_gap),
-        ("levenshtein", D.levenshtein),
         ("jaro_winkler", D.jaro_winkler),
     ):
         t0 = time.time()
