@@ -97,19 +97,21 @@ def _rank_columns(n_matches: int) -> tuple[Column, Column, list[Column]]:
 class SparkGazetteer:
     """Index canonical records once; search/match messy batches against it.
 
-    r6 cost model (the reference's own: gazetteer_postgres_example.py:58-76
-    indexes ONCE, then every daily batch probes the persisted index):
-    ``index()`` stages not just the blocking map but the canonical side's
-    COMPLETE hydration payload (64-char prefixes + tf-idf arrays) and the
-    corpus token statistics (per-token df + corpus size). ``search`` /
-    ``match`` then launch no job over the canonical text at all — the
-    messy delta is tokenized fresh, weighted against the STAGED index-time
-    IDF, and joined to the staged payload. IDF is therefore an index-time
-    constant of the canonical corpus (previously it was recomputed over
-    union(messy, canonical) per batch — a full-corpus rescan per delta,
-    the wrong cost model at 100 TB); a messy token absent from the index
-    vocabulary carries no weight, exactly as a gazetteer index that has
-    never seen the token.
+    Index cost model (the reference's own: gazetteer_postgres_example.py:
+    58-76 indexes ONCE, then every daily batch probes the persisted index):
+    ``index()`` keeps exactly the three tables the probe reads —
+    ``gazetteer_index`` (the capped blocking map), ``gazetteer_dfreq_<col>``
+    (per-token df of each text column) and ``gazetteer_slim`` (the
+    canonical side's COMPLETE hydration payload, 64-char prefixes + tf-idf
+    arrays, one row per record, so its row count is the corpus size).
+    ``search`` / ``match`` then launch no job over the canonical text at
+    all — the messy delta is tokenized fresh, weighted against the STAGED
+    index-time IDF, and joined to the staged payload. IDF is therefore an
+    index-time constant of the canonical corpus (previously it was
+    recomputed over union(messy, canonical) per batch — a full-corpus
+    rescan per delta, the wrong cost model at 100 TB); a messy token absent
+    from the index vocabulary carries no weight, exactly as a gazetteer
+    index that has never seen the token.
 
     Per-batch cost model. Every Column expression a batch needs (the
     caller's ``canonicalize``, blocking keys, the messy side's tf-idf
@@ -134,10 +136,8 @@ class SparkGazetteer:
     threshold: float = 0.5
     max_block_size: int = 200
     broadcast_messy: bool = True
-    _canonical: DataFrame | None = None
     _index: DataFrame | None = None
     _slim: DataFrame | None = None
-    _hyd_fields: list[str] | None = None
     _dfreq: dict | None = None
     _n_docs: int | None = None
 
@@ -148,42 +148,17 @@ class SparkGazetteer:
         return sorted({v.column for v in self.model.variables if v.kind == "text"})
 
     def index(self, canonical_records: DataFrame, catalog=None) -> None:
-        """≙ gazetteer.index(canonical) — build + persist the blocking index
-        AND the canonical hydration payload + token statistics. With
-        ``catalog`` (checkpoints.Catalog) everything is written as catalog
-        tables — the durable ``indexed_records`` store of
+        """≙ gazetteer.index(canonical) — build ``gazetteer_index``,
+        ``gazetteer_dfreq_<col>`` and ``gazetteer_slim``, releasing any
+        previous index first. With ``catalog`` (checkpoints.Catalog) they
+        are catalog tables — the durable ``indexed_records`` store of
         gazetteer_postgres_example.py:58-76 — so a new process calls
-        load_index() and searches without touching the canonical corpus."""
+        load_index() and searches without touching the canonical corpus;
+        without one they are persisted in memory."""
         from sparklink import distances as D
 
+        self.unindex()
         dd = self._dd()
-        idx_thunk = lambda: B.cap_block_sizes(  # noqa: E731
-            B.build_blocking_map(canonical_records, self.predicates), self.max_block_size
-        )
-
-        # ONE persisted (record, token, tf) frame per text column feeds both
-        # the staged dfreq and the staged slim payload — the canonical
-        # corpus is tokenized/exploded once per column at index build, in
-        # the record_id-partitioned layout so the tf aggregate and the
-        # vocab collect add no exchange over the corpus (the same shape
-        # pipeline._token_stats uses)
-        stats: dict[str, tuple[DataFrame, DataFrame, DataFrame]] = {}
-
-        def stats_for(col: str) -> tuple[DataFrame, DataFrame, DataFrame]:
-            if col not in stats:
-                stats[col] = B.partitioned_token_stats(canonical_records, col)
-            return stats[col]
-
-        def slim_thunk() -> DataFrame:
-            # reuses the already-staged/persisted dfreq (self._dfreq)
-            vecs_by_col = {}
-            for col in self._text_cols():
-                vocab = B.record_token_vocab(stats_for(col)[1], self._dfreq[col])
-                vecs_by_col[col] = D.tfidf_token_arrays_from_vocab(vocab, self._n_docs)
-            slim, self._hyd_fields = dd.slim_hydration_frame(canonical_records, vecs_by_col)
-            return slim
-
-        self._n_docs = canonical_records.count()
         if catalog is not None:
             from sparklink.pipeline import _input_fingerprint
 
@@ -197,71 +172,67 @@ class SparkGazetteer:
                 "model": self.model.to_json(),
                 "input": _input_fingerprint(canonical_records),
             }
-            self._canonical = catalog.stage("gazetteer_canonical", params, lambda: canonical_records)
-            idx = catalog.stage("gazetteer_index", params, idx_thunk)
-            spark = canonical_records.sparkSession
-            catalog.stage(
-                "gazetteer_meta",
-                params,
-                lambda: spark.createDataFrame([(int(self._n_docs),)], "n_docs bigint"),
-            )
-            self._dfreq = {}
-            for col in self._text_cols():
-                self._dfreq[col] = catalog.stage(f"gazetteer_dfreq_{col}", params, lambda c=col: stats_for(c)[2])
-            slim = catalog.stage("gazetteer_slim", params, slim_thunk)
-            # the staged slim table's column list IS the hydration field
-            # list (minus the id) — recover it so load_index() in a fresh
-            # process needs no recomputation
-            self._hyd_fields = [c for c in slim.columns if c != "conv_id"]
-        else:
-            # the canonical records stay referenced only for API
-            # back-compat — the probe path reads ONLY the staged/persisted
-            # index, slim payload and token stats below, so the records
-            # themselves are no longer cached (at a 341k-record corpus the
-            # old cache fill alone cost ~10s and held GBs for nothing)
-            self._canonical = canonical_records
-            self._own_canonical = False
-            idx = idx_thunk()
-            self._dfreq = {}
-            for col in self._text_cols():
-                d = stats_for(col)[2].persist()
-                d.count()
-                self._dfreq[col] = d
-            slim = slim_thunk().persist()
-            slim.count()
-        self._slim = slim
-        self._index = idx.persist()
-        self._index.count()
+
+        def keep(name: str, build, cache: bool = False) -> DataFrame:
+            # with a catalog: the staged table's parquet scan, cached only
+            # when asked; without one: the built frame, always cached
+            df = catalog.stage(name, params, build) if catalog is not None else build()
+            if catalog is None or cache:
+                df = df.persist()
+                df.count()
+            return df
+
+        # ONE persisted (record, token, tf) frame per text column feeds both
+        # the dfreq and the slim payload, in the record_id-partitioned layout
+        # of pipeline._token_stats, so neither adds an exchange over the corpus
+        stats: dict[str, tuple[DataFrame, DataFrame, DataFrame]] = {}
+
+        def stats_for(col: str) -> tuple[DataFrame, DataFrame, DataFrame]:
+            if col not in stats:
+                stats[col] = B.partitioned_token_stats(canonical_records, col)
+            return stats[col]
+
+        def slim() -> DataFrame:
+            # weighted by the dfreq kept just before
+            vecs_by_col = {
+                col: D.tfidf_token_arrays_from_vocab(
+                    B.record_token_vocab(stats_for(col)[1], self._dfreq[col]), self._n_docs
+                )
+                for col in self._text_cols()
+            }
+            return dd.slim_hydration_frame(canonical_records, vecs_by_col)[0]
+
+        self._n_docs = canonical_records.count()
+        self._index = keep(
+            "gazetteer_index",
+            lambda: B.cap_block_sizes(B.build_blocking_map(canonical_records, self.predicates), self.max_block_size),
+            cache=True,
+        )
+        self._dfreq = {col: keep(f"gazetteer_dfreq_{col}", lambda c=col: stats_for(c)[2]) for col in self._text_cols()}
+        self._slim = keep("gazetteer_slim", slim)
         for toks, tf, _ in stats.values():
             toks.unpersist()
             tf.unpersist()
 
     def load_index(self, catalog) -> None:
-        """Resume a previously indexed gazetteer from the catalog (new
-        process, no re-blocking, no canonical-corpus scan — the
-        incremental-matching workflow the reference runs against its
-        indexed_records table)."""
-        self._canonical = catalog.load("gazetteer_canonical")
+        """Resume a previously indexed gazetteer from the catalog's
+        ``gazetteer_index``, ``gazetteer_dfreq_<col>`` and
+        ``gazetteer_slim`` tables (new process, no re-blocking, no
+        canonical-corpus scan — the incremental-matching workflow the
+        reference runs against its indexed_records table). The corpus size
+        is the slim payload's row count: one row per canonical record."""
+        self.unindex()
         self._index = catalog.load("gazetteer_index").persist()
         self._index.count()
-        self._slim = catalog.load("gazetteer_slim")
-        self._hyd_fields = [c for c in self._slim.columns if c != "conv_id"]
-        self._n_docs = int(catalog.load("gazetteer_meta").collect()[0]["n_docs"])
         self._dfreq = {col: catalog.load(f"gazetteer_dfreq_{col}") for col in self._text_cols()}
+        self._slim = catalog.load("gazetteer_slim")
+        self._n_docs = self._slim.count()
 
     def unindex(self) -> None:
-        if self._index is not None:
-            self._index.unpersist()
-            self._index = None
-        for d in (self._dfreq or {}).values():
-            d.unpersist()
-        self._dfreq = None
-        if self._slim is not None:
-            self._slim.unpersist()
-            self._slim = None
-        if getattr(self, "_own_canonical", False) and self._canonical is not None:
-            self._canonical.unpersist()
-            self._own_canonical = False
+        for df in (self._index, self._slim, *(self._dfreq or {}).values()):
+            if df is not None:
+                df.unpersist()
+        self._index = self._slim = self._dfreq = None
 
     def _scored(self, messy_records: DataFrame) -> DataFrame:
         from sparklink import distances as D
@@ -282,11 +253,14 @@ class SparkGazetteer:
             for col in self._text_cols()
         }
         slim_m, fields_m = dd.slim_hydration_frame(messy_records, vecs_by_col)
-        assert self._hyd_fields is not None and fields_m == self._hyd_fields, (
-            f"staged index hydration fields {self._hyd_fields} do not match this "
+        # the staged slim table's columns (minus the id) are the index's
+        # hydration fields
+        fields = [c for c in self._slim.columns if c != "conv_id"]
+        assert fields_m == fields, (
+            f"staged index hydration fields {fields} do not match this "
             f"model's layout {fields_m} — re-index with the current model"
         )
-        hyd = P.hydrate_two(cand, slim_m, self._slim, self._hyd_fields)
+        hyd = P.hydrate_two(cand, slim_m, self._slim, fields)
         withd = dd._features_from_hydrated(hyd)
         return dd.model.score(withd).select("id_a", "id_b", "score")
 

@@ -574,7 +574,11 @@ class SparkDedupe:
         runs through its indexed gazetteer (gazetteer_postgres_example.py:
         285-345: search new rows against indexed_records, UPDATE matches,
         INSERT the rest). Cost is O(new x blocked-existing), not
-        O((old+new)^2).
+        O((old+new)^2). Index cost: without a catalog every call rebuilds
+        the gazetteer index over ``existing_records`` (one blocking pass
+        and one tokenization of the whole existing corpus per batch); with
+        one the index tables are staged in the child warehouse, keyed on
+        the existing records, and later calls resume them.
 
         Three-way split: (1) new records whose best gazetteer match in the
         existing corpus clears the threshold inherit that record's

@@ -1,6 +1,6 @@
 """Round-2 additions: NN-chain HAC, fingerprint chaining, categorical
 dummies, structured name/address variables, cross-source id collisions,
-gazetteer index persistence, vectorized sparse_dot, distributed IVF."""
+vectorized sparse_dot, distributed IVF."""
 
 import time
 
@@ -267,35 +267,6 @@ def test_cross_source_id_collision_hydrates_own_side(spark):
     assert out.loc[0, "id_a"] == "x" and out.loc[0, "id_b"] == "x"
     assert out.loc[0, "first_user_text_a"] == "alpha"
     assert out.loc[0, "first_user_text_b"] == "delta"
-
-
-def test_gazetteer_index_persist_and_reload(spark, fixture_dfs, tmp_path):
-    import json
-    import os
-
-    from sparklink.canonicalize import canonicalize
-    from sparklink.checkpoints import Catalog
-    from sparklink.linkage import SparkGazetteer
-    from sparklink.score import FieldModel
-
-    art = json.load(open(os.path.join(os.path.dirname(__file__), "..", "models", "transcript_model.json")))
-    model = FieldModel.from_json(json.dumps(art))
-
-    transcripts, truth, labeled = fixture_dfs
-    records = canonicalize(transcripts).persist()
-    canonical = records.limit(40).persist()
-    wh = str(tmp_path / "gaz")
-
-    g1 = SparkGazetteer(model=model, threshold=float(art["threshold"]))
-    g1.index(canonical, catalog=Catalog(spark, wh))
-    s1 = g1.search(records, n_matches=1).toPandas().sort_values("messy_id").reset_index(drop=True)
-    g1.unindex()
-
-    # fresh gazetteer, fresh catalog handle: load without re-blocking
-    g2 = SparkGazetteer(model=model, threshold=float(art["threshold"]))
-    g2.load_index(Catalog(spark, wh))
-    s2 = g2.search(records, n_matches=1).toPandas().sort_values("messy_id").reset_index(drop=True)
-    pd.testing.assert_frame_equal(s1, s2)
 
 
 # ---------------------------------------------------------------------------

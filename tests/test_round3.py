@@ -4,8 +4,7 @@ Covers: scale-safe IVF cell assignment (broadcast data, not plan
 literals), expr/pandas assignment parity, deterministic IVF init under
 shuffled partitioning, sparse_dot in-row hash-collision hardening,
 production xxhash64 LSH candidate quality, Iceberg opt-in catalog
-backend recording, gazetteer index input fingerprinting, HAC tie-order
-pinning.
+backend recording, HAC tie-order pinning.
 """
 
 from __future__ import annotations
@@ -361,52 +360,6 @@ def test_catalog_iceberg_branch_end_to_end(spark, tmp_path):
     # MERGE write-back (SparkGazetteer.merge_matches) needs this catalog too
     recs = [r for r in cat._lineage() if r.get("event") == "write"]
     assert all(r["backend"] == "iceberg" for r in recs)
-
-
-# ---------------------------------------------------------------------------
-# Gazetteer: index identity includes the input fingerprint (r2 ADVICE)
-# ---------------------------------------------------------------------------
-
-
-def test_gazetteer_reindex_different_canonical_invalidates(spark, tmp_path):
-    from sparklink.checkpoints import Catalog
-    from sparklink.linkage import SparkGazetteer
-    from sparklink.synth import make_transcripts
-
-    t1, _ = make_transcripts(n_entities=12, seed=1)
-    t2, _ = make_transcripts(n_entities=12, seed=2)
-    from sparklink.canonicalize import canonicalize
-
-    c1 = canonicalize(spark.createDataFrame(t1))
-    c2 = canonicalize(spark.createDataFrame(t2))
-    # materialize as parquet so _input_fingerprint sees distinct files
-    p1, p2 = str(tmp_path / "c1"), str(tmp_path / "c2")
-    c1.write.parquet(p1)
-    c2.write.parquet(p2)
-    c1, c2 = spark.read.parquet(p1), spark.read.parquet(p2)
-
-    wh = str(tmp_path / "gwh")
-    gaz = SparkGazetteer()
-    gaz.index(c1, catalog=Catalog(spark, wh))
-    n1 = gaz._index.count()
-    ids1 = {r.record_id for r in gaz._canonical.select(F.col("conv_id").alias("record_id")).collect()}
-
-    # same predicates, DIFFERENT canonical records: must NOT resume stale
-    gaz2 = SparkGazetteer()
-    cat2 = Catalog(spark, wh)
-    gaz2.index(c2, catalog=cat2)
-    ids2 = {r.record_id for r in gaz2._canonical.select(F.col("conv_id").alias("record_id")).collect()}
-    assert ids2 != ids1, "stale gazetteer_canonical resumed despite new input"
-    resume_hits = [m for m in cat2.metrics() if m.get("event") == "resume_hit"]
-    assert not resume_hits, "different canonical input must invalidate the index stage"
-
-    # identical input DOES resume
-    gaz3 = SparkGazetteer()
-    cat3 = Catalog(spark, wh)
-    gaz3.index(c2, catalog=cat3)
-    assert gaz3._index.count() == gaz2._index.count()
-    assert [m for m in cat3.metrics() if m.get("event") == "resume_hit"]
-    assert n1 >= 0
 
 
 # ---------------------------------------------------------------------------

@@ -680,34 +680,6 @@ def test_partition_probe_refuses_intersect_and_truncated_plans(spark):
         assert not _partition_probe_is_free(wide)
 
 
-def test_gazetteer_index_stages_probe_frames_without_canonical_cache(spark):
-    """r6: the probe path (search/match) reads ONLY the staged index,
-    slim payload and token stats — index() must leave the canonical
-    records uncached (at corpus scale the old cache fill held GBs the
-    probe path never read) while the frames search actually uses are
-    cached, and unindex() releases them."""
-    from sparklink.linkage import SparkGazetteer
-    from sparklink.pipeline import SparkDedupe
-
-    dd = SparkDedupe()
-    t = spark.createDataFrame(
-        [("c1", 0, "user", "hello world example text", None, None),
-         ("c1", 1, "assistant", "sure thing happy to help", None, None),
-         ("c2", 0, "user", "another canonical record here", None, None),
-         ("c2", 1, "assistant", "of course let me check", None, None)],
-        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
-    )
-    recs = dd.canonical_records(t)
-    gaz = SparkGazetteer(model=dd.model, predicates=dd.predicates, threshold=0.5)
-    gaz.index(recs)
-    assert not recs.is_cached  # the corpus itself is NOT cached anymore
-    assert gaz._index.is_cached and gaz._slim.is_cached
-    assert all(d.is_cached for d in gaz._dfreq.values())
-    held = [gaz._index, gaz._slim, *gaz._dfreq.values()]
-    gaz.unindex()
-    assert not any(h.is_cached for h in held)
-
-
 def test_scaling_summary_exact_metric_gated_count_and_true_median(tmp_path, monkeypatch):
     import bench
 

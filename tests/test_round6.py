@@ -1,7 +1,6 @@
 """Round-6 optimization regressions: every change here re-shapes a plan
 without changing what it computes — these tests pin the "without
-changing" half (and the one deliberate semantic change, the gazetteer's
-index-time IDF, via its new no-canonical-scan contract)."""
+changing" half."""
 
 from __future__ import annotations
 
@@ -159,91 +158,6 @@ def test_refine_components_bucketed_many_components(spark):
         a, b, c = f"a{k:02d}", f"b{k:02d}", f"c{k:02d}"
         assert out[a] == out[b]
         assert out[c] != out[a]
-
-
-def test_gazetteer_search_without_canonical_corpus(spark, tmp_path):
-    """VERDICT r5 #1 done-criterion: after load_index from a catalog, the
-    search path must run ENTIRELY from the staged tables — no job over the
-    canonical corpus (simulated by severing the canonical frame)."""
-    from sparklink.checkpoints import Catalog
-    from sparklink.linkage import SparkGazetteer
-    from sparklink.synth import write_fixture
-    from sparklink.canonicalize import canonicalize
-
-    paths = write_fixture(spark, str(tmp_path / "data"), n_entities=30, seed=11)
-    transcripts = spark.read.parquet(paths["transcripts"])
-    records = canonicalize(transcripts)
-    ids = records.select("conv_id").distinct()
-    messy_ids = ids.filter(F.pmod(F.xxhash64("conv_id"), F.lit(10)) == 0)
-    messy = records.join(messy_ids, "conv_id", "left_semi").localCheckpoint(eager=True)
-    base = records.join(messy_ids, "conv_id", "left_anti").localCheckpoint(eager=True)
-
-    import json as _json
-
-    from sparklink.score import FieldModel
-
-    art = _json.load(open("models/transcript_model.json"))
-    model = FieldModel.from_json(_json.dumps(art))
-    cat = Catalog(spark, str(tmp_path / "wh"))
-    gaz = SparkGazetteer(model=model, threshold=float(art["threshold"]))
-    gaz.index(base, catalog=cat)
-    before = {(r["messy_id"], r["canonical_id"], r["rank"]) for r in gaz.search(messy, n_matches=2).collect()}
-    gaz.unindex()
-
-    # fresh process proxy: reload from the catalog, then SEVER the
-    # canonical records — search must neither scan nor reference them
-    gaz2 = SparkGazetteer(model=model, threshold=float(art["threshold"]))
-    gaz2.load_index(cat)
-    gaz2._canonical = None
-    after = {(r["messy_id"], r["canonical_id"], r["rank"]) for r in gaz2.search(messy, n_matches=2).collect()}
-    assert after == before and len(after) > 0
-
-
-def test_match_new_second_batch_reuses_staged_gazetteer(spark, tmp_path):
-    """VERDICT r5 #2 done-criterion: a second match_new batch against the
-    SAME base must resume the staged gazetteer tables (index, slim
-    payload, token stats) instead of re-deriving anything about the
-    unchanged base — asserted via the child catalog's resume_hit
-    metrics."""
-    import json as _json
-
-    from sparklink.checkpoints import Catalog
-    from sparklink.pipeline import SparkDedupe
-    from sparklink.score import FieldModel
-    from sparklink.synth import write_fixture
-    from sparklink.canonicalize import canonicalize
-
-    paths = write_fixture(spark, str(tmp_path / "data"), n_entities=30, seed=3)
-    transcripts = spark.read.parquet(paths["transcripts"])
-    ids = transcripts.select("conv_id").distinct()
-    mod = F.pmod(F.xxhash64("conv_id"), F.lit(10))
-    base_t = transcripts.join(ids.filter(mod >= 2), "conv_id", "left_semi").localCheckpoint(eager=True)
-    d1 = transcripts.join(ids.filter(mod == 0), "conv_id", "left_semi").localCheckpoint(eager=True)
-    d2 = transcripts.join(ids.filter(mod == 1), "conv_id", "left_semi").localCheckpoint(eager=True)
-
-    art = _json.load(open("models/transcript_model.json"))
-    dd = SparkDedupe(
-        model=FieldModel.from_json(_json.dumps(art)),
-        threshold=float(art["threshold"]),
-        catalog=Catalog(spark, str(tmp_path / "wh")),
-    )
-    base_records = dd.canonical_records(base_t).localCheckpoint(eager=True)
-    em0 = dd.partition(base_t).localCheckpoint(eager=True)
-    dd.release_token_stats()
-
-    assert dd.match_new(d1, base_records, em0).count() > 0
-    child = Catalog(spark, str(tmp_path / "wh" / "match_new_batch"))
-    hits_before = sum(
-        1 for m in child.metrics() if m.get("event") == "resume_hit" and m["stage"].startswith("gazetteer_")
-    )
-    assert dd.match_new(d2, base_records, em0).count() > 0
-    hits_after = sum(
-        1 for m in child.metrics() if m.get("event") == "resume_hit" and m["stage"].startswith("gazetteer_")
-    )
-    resumed = hits_after - hits_before
-    # index + canonical + meta + dfreq + slim all keyed on the BASE
-    # fingerprint -> every one resumes on the second batch
-    assert resumed >= 5, f"only {resumed} gazetteer stages resumed on the second batch"
 
 
 def test_block_keys_distinct_per_row(spark):
