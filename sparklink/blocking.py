@@ -24,7 +24,7 @@ Scale controls (BASELINE.json north_rule: "skew handled explicitly"):
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Callable
+from typing import Callable, NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -187,24 +187,47 @@ def token_stats(records: DataFrame, column: str, id_col: str = "conv_id") -> tup
     pipeline's conv_text happens to be lowered by clean_text, which masked
     this for other callers). Idempotent on already-lowered input."""
     recs = widen_to_parallelism(records)
-    tok_cols, token, tf_count, df_count = session_expr(
-        ("token_stats", column, id_col), lambda: _token_columns(column, id_col)
-    )
-    toks = recs.select(*tok_cols)
-    tf = toks.select(F.col("record_id"), token).groupBy("record_id", "token").agg(tf_count)
-    dfreq = tf.groupBy("token").agg(df_count)
+    c = _token_columns(column, id_col)
+    toks = recs.select(c.record_id, c.toks)
+    tf = token_tf(recs, column, id_col)
+    dfreq = tf.groupBy("token").agg(c.df)
     return toks, tf, dfreq
 
 
-def _token_columns(column: str, id_col: str) -> tuple[list[Column], Column, Column, Column]:
-    """(token-array projection, token explode, tf count, df count) of
-    token_stats and partitioned_token_stats."""
-    return (
-        [F.col(id_col).alias("record_id"), tokens(F.lower(F.col(column))).alias("toks")],
-        F.explode("toks").alias("token"),
-        F.count("*").alias("tf"),
-        F.count("*").alias("df"),
-    )
+def token_tf(records: DataFrame, column: str, id_col: str = "conv_id") -> DataFrame:
+    """(record_id, token, tf), tokenized like :func:`token_stats` and
+    exploded straight from ``column``: the tf frame for callers that need
+    no token array."""
+    c = _token_columns(column, id_col)
+    return records.select(c.record_id, c.token).groupBy(*c.tf_keys).agg(c.tf)
+
+
+class _TokenColumns(NamedTuple):
+    record_id: Column
+    toks: Column  # the lowercased token array
+    token: Column  # the same tokens exploded straight from the column
+    toks_token: Column  # the token array exploded
+    tf_keys: list[Column]  # (record_id, token)
+    tf: Column
+    df: Column
+
+
+def _token_columns(column: str, id_col: str) -> _TokenColumns:
+    """The expressions of the token-stats builders, built once per session."""
+
+    def build() -> _TokenColumns:
+        toks = tokens(F.lower(F.col(column)))
+        return _TokenColumns(
+            F.col(id_col).alias("record_id"),
+            toks.alias("toks"),
+            F.explode(toks).alias("token"),
+            F.explode("toks").alias("token"),
+            [F.col("record_id"), F.col("token")],
+            F.count("*").alias("tf"),
+            F.count("*").alias("df"),
+        )
+
+    return session_expr(("token_stats", column, id_col), build)
 
 
 def partitioned_token_stats(
@@ -225,17 +248,14 @@ def partitioned_token_stats(
     unknown partitioning, and consumers planned against it would
     re-insert the exchanges. Callers own unpersisting toks and tf.
     """
-    tok_cols, token, tf_count, df_count = session_expr(
-        ("token_stats", column, id_col), lambda: _token_columns(column, id_col)
-    )
-    toks = records.select(*tok_cols).repartition("record_id")
+    c = _token_columns(column, id_col)
+    toks = records.select(c.record_id, c.toks).repartition("record_id")
     toks = toks.persist()
     toks.count()
-    ex = toks.select(F.col("record_id"), token)
-    tf = ex.groupBy("record_id", "token").agg(tf_count)
+    tf = toks.select(c.tf_keys[0], c.toks_token).groupBy(*c.tf_keys).agg(c.tf)
     tf = tf.persist()
     tf.count()
-    return toks, tf, tf.groupBy("token").agg(df_count)
+    return toks, tf, tf.groupBy("token").agg(c.df)
 
 
 def record_token_vocab(tf: DataFrame, dfreq: DataFrame) -> DataFrame:
@@ -250,9 +270,15 @@ def record_token_vocab(tf: DataFrame, dfreq: DataFrame) -> DataFrame:
     array-side replaces both (guide §2.4: operations keyed the same way
     share one exchange). Selection and weights are bit-identical: the
     array comparator replicates the windows' (w desc, token asc) order.
+
+    ``dfreq`` is joined as given: callers pass it broadcast-hinted
+    (``F.broadcast``), so the (record, token) side is never shuffled for
+    the join. A caller that probes the same dfreq repeatedly hints it once.
     """
-    vocab = session_expr(("token_vocab",), lambda: F.collect_list(F.struct("token", "tf", "df")).alias("vocab"))
-    return tf.join(F.broadcast(dfreq), "token").groupBy("record_id").agg(vocab)
+    record_id, vocab = session_expr(
+        ("token_vocab",), lambda: (F.col("record_id"), F.collect_list(F.struct("token", "tf", "df")).alias("vocab"))
+    )
+    return tf.join(dfreq, "token").groupBy(record_id).agg(vocab)
 
 
 def ranked_vocab(n_docs: int, max_df_frac: float) -> Column:

@@ -375,7 +375,7 @@ def tfidf_token_arrays(
     n_docs = records.count()
     _, tf, dfreq = token_stats(records, column, id_col)
     return tfidf_token_arrays_from_vocab(
-        record_token_vocab(tf, dfreq), n_docs, top_m=top_m, max_df_frac=max_df_frac
+        record_token_vocab(tf, F.broadcast(dfreq)), n_docs, top_m=top_m, max_df_frac=max_df_frac
     )
 
 
@@ -399,24 +399,26 @@ def _tfidf_array_columns(n_docs: int, top_m: int, max_df_frac: float, hash_expr)
         lambda a, b: F.when(a["h"] < b["h"], -1)
         .when(a["h"] > b["h"], 1)
         .otherwise(F.when(a["w"] > b["w"], -1).when(a["w"] < b["w"], 1).otherwise(0)),
-    )
+    ).alias("hws")
     # element_at is 1-based: element_at(hws, i) at 0-based position i is
     # the PREVIOUS element (greatest() guards ANSI index-0 for i=0, where
     # the i=0 arm of the OR keeps the element regardless)
     hw = F.filter(
         "hws",
         lambda x, i: (i == 0) | (x["h"] != F.element_at(F.col("hws"), F.greatest(i, F.lit(1)))["h"]),
-    )
+    ).alias("hw")
     # norm can be 0 with a NON-empty hw: a record whose every token has
     # df == n_docs gets idf 0 for all of them (common in tiny corpora,
     # possible at any scale) — 0/0 is fatal under ANSI; emit 0-weights
-    norm = F.sqrt(F.aggregate("hw", F.lit(0.0), lambda acc, s: acc + s["w"] * s["w"]))
+    norm = F.sqrt(F.aggregate("hw", F.lit(0.0), lambda acc, s: acc + s["w"] * s["w"])).alias("norm")
     safe_w = lambda s: F.when(F.col("norm") > 0, s["w"] / F.col("norm")).otherwise(F.lit(0.0))  # noqa: E731
     return (
+        F.col("record_id"),
         hw0,
         F.size("hw0") > 0,
         hws,
         hw,
+        F.col("hw"),
         norm,
         F.transform("hw", lambda s: s["h"]).alias("tfh"),
         F.transform("hw", lambda s: safe_w(s).cast("float")).alias("tfw"),
@@ -451,14 +453,15 @@ def tfidf_token_arrays_from_vocab(
     The expressions are built once per session and corpus constants
     (session.session_expr)."""
     hash_expr = hash_expr or _default_token_hash
-    hw0, nonempty, hws, hw, norm, tfh, tfw = session_expr(
+    rid, hw0, nonempty, hws, hw, hw_ref, norm, tfh, tfw = session_expr(
         ("tfidf_arrays", n_docs, top_m, max_df_frac, hash_expr),
         lambda: _tfidf_array_columns(n_docs, top_m, max_df_frac, hash_expr),
     )
-    agg = vocab.select(F.col("record_id"), hw0).filter(nonempty)
-    agg = agg.withColumn("hws", hws).drop("hw0").withColumn("hw", hw).withColumn("norm", norm)
+    # one select per materialized step: each step's array is read more
+    # than once by the next
+    agg = vocab.select(rid, hw0).filter(nonempty).select(rid, hws).select(rid, hw).select(rid, hw_ref, norm)
     # int32 hashes + float32 weights: halves the Arrow transfer per pair
-    return agg.select(F.col("record_id"), tfh, tfw)
+    return agg.select(rid, tfh, tfw)
 
 
 def sparse_dot(ha: pd.Series, wa: pd.Series, hb: pd.Series, wb: pd.Series) -> np.ndarray:

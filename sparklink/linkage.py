@@ -86,11 +86,27 @@ class SparkRecordLink:
         return self.one_to_one(self.scored_cross_pairs(left, right), threshold if threshold is not None else self.threshold)
 
 
-def _rank_columns(n_matches: int) -> tuple[Column, Column, list[Column]]:
-    """(rank, top-n filter, output projection) of SparkGazetteer.search."""
+def _top_columns(n_matches: int) -> tuple[list[Column], Column]:
+    """(output projection with the rank window, top-n filter) of
+    SparkGazetteer.search."""
     w = Window.partitionBy("id_a").orderBy(F.desc("score"), F.asc("id_b"))
-    out = [F.col("id_a").alias("messy_id"), F.col("id_b").alias("canonical_id"), F.col("score"), F.col("rank")]
-    return F.row_number().over(w), F.col("rank") <= n_matches, out
+    out = [
+        F.col("id_a").alias("messy_id"),
+        F.col("id_b").alias("canonical_id"),
+        F.col("score"),
+        F.row_number().over(w).alias("rank"),
+    ]
+    return out, F.col("rank") <= n_matches
+
+
+@dataclass(frozen=True)
+class _Probe:
+    """The index-side frames every batch joins, built once per index."""
+
+    keys: DataFrame  # the index as (block_key, id_b)
+    side_b: DataFrame  # the canonical hydration side (id_b, <field>_b ...)
+    dfreq: dict[str, DataFrame]  # broadcast-hinted (token, df) per text column
+    fields: list[str]  # the staged hydration fields
 
 
 @dataclass
@@ -103,27 +119,44 @@ class SparkGazetteer:
     ``gazetteer_index`` (the capped blocking map), ``gazetteer_dfreq_<col>``
     (per-token df of each text column) and ``gazetteer_slim`` (the
     canonical side's COMPLETE hydration payload, 64-char prefixes + tf-idf
-    arrays, one row per record, so its row count is the corpus size).
-    ``search`` / ``match`` then launch no job over the canonical text at
-    all — the messy delta is tokenized fresh, weighted against the STAGED
-    index-time IDF, and joined to the staged payload. IDF is therefore an
-    index-time constant of the canonical corpus (previously it was
-    recomputed over union(messy, canonical) per batch — a full-corpus
-    rescan per delta, the wrong cost model at 100 TB); a messy token absent
-    from the index vocabulary carries no weight, exactly as a gazetteer
-    index that has never seen the token.
+    arrays, one row per record, so its row count is the corpus size) —
+    and builds the frames a batch joins from them once: the index as
+    ``(block_key, id_b)``, the ``_b``-named hydration side and the
+    broadcast dfreq. ``search`` / ``match`` then launch no job over the
+    canonical text at all — the messy delta is tokenized fresh, weighted
+    against the STAGED index-time IDF, and joined to the staged payload.
+    IDF is therefore an index-time constant of the canonical corpus
+    (previously it was recomputed over union(messy, canonical) per batch —
+    a full-corpus rescan per delta, the wrong cost model at 100 TB); a
+    messy token absent from the index vocabulary carries no weight,
+    exactly as a gazetteer index that has never seen the token.
 
-    Per-batch cost model. Every Column expression a batch needs (the
-    caller's ``canonicalize``, blocking keys, the messy side's tf-idf
-    arrays, hydration projections, distances, score and rank window) is
-    built once per session and reused (session.session_expr), so a batch
-    pays only its DataFrame operations and its Spark jobs. On a 4-core
-    host a warm 9-conversation batch made ~550 py4j round trips (6,200
-    when every batch rebuilt its expressions) and compiled ~2 codegen
-    classes (23-59 before), because repeated expressions generate
-    repeated code for the codegen cache. What remains is the Spark jobs:
-    a ``match`` written to a parquet sink runs 12 of them, ~1 s of a ~2 s
-    warm batch there.
+    Only the index side is block-capped (at index time): a messy record's
+    candidates are the canonical records sharing one of its keys, whatever
+    else arrived in its batch, so matching a batch alone equals the bulk
+    match restricted to that batch. The cap still bounds the candidate
+    join: each messy key meets at most ``max_block_size`` canonical
+    records.
+
+    Per-batch cost model. A batch pays only for its own rows: every
+    Column expression it needs (the caller's ``canonicalize``, blocking
+    keys, tf-idf arrays, hydration projections, distances, score and rank
+    window) is built once per session (session.session_expr), and
+    ``match`` builds its DataFrame from 26 operations, one per step that
+    must be materialized (about 50 before). Measured on a 4-core host
+    with a warm 9-conversation batch against a 2,004-record index:
+    building ``match`` makes ~195 py4j round trips (~410 before), and
+    writing it to a parquet sink runs 8 Spark jobs (12 before): the
+    batch's canonicalize exchange; broadcasts of the dfreq, the canonical
+    payload, the messy block keys and the messy payload (whose tf-idf
+    arrays join it without an exchange, both sides being partitioned by
+    the canonicalize exchange); the pair-dedup exchange; the rank-window
+    exchange; and the write. The dedup and the window cannot share one
+    exchange: Spark's ArrowEvalPython, which scores the pairs between
+    them, reports no output partitioning. What remains is mostly fixed
+    cost: the batch's one scoring task runs 0.27-0.45 s, while the four
+    scoring kernels take under 0.1 s for ~600 pairs; the rest is the
+    Python task's own start-up (PySpark's ``setup_spark_files``).
 
     ``broadcast_messy=True`` (default) broadcasts the delta batch's
     blocking keys into the candidate join so the index side is never
@@ -140,6 +173,7 @@ class SparkGazetteer:
     _slim: DataFrame | None = None
     _dfreq: dict | None = None
     _n_docs: int | None = None
+    _probe: _Probe | None = None
 
     def _dd(self) -> SparkDedupe:
         return SparkDedupe(model=self.model, predicates=self.predicates, threshold=self.threshold)
@@ -196,11 +230,11 @@ class SparkGazetteer:
             # weighted by the dfreq kept just before
             vecs_by_col = {
                 col: D.tfidf_token_arrays_from_vocab(
-                    B.record_token_vocab(stats_for(col)[1], self._dfreq[col]), self._n_docs
+                    B.record_token_vocab(stats_for(col)[1], F.broadcast(self._dfreq[col])), self._n_docs
                 )
                 for col in self._text_cols()
             }
-            return dd.slim_hydration_frame(canonical_records, vecs_by_col)[0]
+            return dd.hydration_payload(canonical_records, vecs_by_col, "conv_id", "")
 
         self._n_docs = canonical_records.count()
         self._index = keep(
@@ -213,6 +247,7 @@ class SparkGazetteer:
         for toks, tf, _ in stats.values():
             toks.unpersist()
             tf.unpersist()
+        self._probe = self._probe_frames()
 
     def load_index(self, catalog) -> None:
         """Resume a previously indexed gazetteer from the catalog's
@@ -227,59 +262,91 @@ class SparkGazetteer:
         self._dfreq = {col: catalog.load(f"gazetteer_dfreq_{col}") for col in self._text_cols()}
         self._slim = catalog.load("gazetteer_slim")
         self._n_docs = self._slim.count()
+        self._probe = self._probe_frames()
+
+    def _probe_frames(self) -> _Probe:
+        # the staged slim table's columns (minus the id) are the index's
+        # hydration fields
+        fields = [c for c in self._slim.columns if c != "conv_id"]
+        return _Probe(
+            keys=self._index.select(F.col("block_key"), F.col("record_id").alias("id_b")),
+            side_b=P.hydration_side(self._slim, fields, "conv_id", "b"),
+            dfreq={col: F.broadcast(df) for col, df in self._dfreq.items()},
+            fields=fields,
+        )
 
     def unindex(self) -> None:
         for df in (self._index, self._slim, *(self._dfreq or {}).values()):
             if df is not None:
                 df.unpersist()
-        self._index = self._slim = self._dfreq = None
+        self._index = self._slim = self._dfreq = self._probe = None
 
     def _scored(self, messy_records: DataFrame) -> DataFrame:
+        """(id_a, id_b, score) of every candidate pair of the batch."""
         from sparklink import distances as D
 
-        assert self._index is not None, "call index(canonical) first"
-        bm_messy = B.cap_block_sizes(B.build_blocking_map(messy_records, self.predicates), self.max_block_size)
+        probe = self._probe
+        assert probe is not None, "call index(canonical) first"
+        dd = self._dd()
+        fields_m = dd.hydration_fields()
+        assert fields_m == probe.fields, (
+            f"staged index hydration fields {probe.fields} do not match this "
+            f"model's layout {fields_m} — re-index with the current model"
+        )
+        preds = tuple(self.predicates)
+        keys_a = messy_records.select(
+            *session_expr(
+                ("gazetteer_keys", preds),
+                lambda: [F.col("conv_id").alias("id_a"), F.explode(B.block_keys_column(preds)).alias("block_key")],
+            )
+        )
         # the messy side is a delta batch probing a (potentially 100 TB)
         # index: broadcast its keys so the index is never shuffled by the
-        # candidate join (guide §3.1); the hint survives the projection
-        cand = P.candidate_pairs_cross(F.broadcast(bm_messy) if self.broadcast_messy else bm_messy, self._index)
-        dd = self._dd()
+        # candidate join (guide §3.1)
+        cand = (
+            (F.broadcast(keys_a) if self.broadcast_messy else keys_a)
+            .join(probe.keys, "block_key")
+            .dropDuplicates(["id_a", "id_b"])
+        )
         # messy-side payload only: fresh tf over the delta, weighted by the
         # STAGED canonical df / corpus size — no canonical-side job
         vecs_by_col = {
             col: D.tfidf_token_arrays_from_vocab(
-                B.record_token_vocab(B.token_stats(messy_records, col)[1], self._dfreq[col]), self._n_docs
+                B.record_token_vocab(B.token_tf(messy_records, col), probe.dfreq[col]), self._n_docs
             )
             for col in self._text_cols()
         }
-        slim_m, fields_m = dd.slim_hydration_frame(messy_records, vecs_by_col)
-        # the staged slim table's columns (minus the id) are the index's
-        # hydration fields
-        fields = [c for c in self._slim.columns if c != "conv_id"]
-        assert fields_m == fields, (
-            f"staged index hydration fields {fields} do not match this "
-            f"model's layout {fields_m} — re-index with the current model"
+        side_a = dd.hydration_payload(messy_records, vecs_by_col, "id_a", "_a")
+        # the batch's payload is the broadcast side: broadcasting the
+        # candidates instead costs one more job
+        hyd = cand.join(F.broadcast(side_a) if self.broadcast_messy else side_a, "id_a").join(probe.side_b, "id_b")
+        model = dd.model
+        scored = session_expr(
+            ("gazetteer_scored", model.score_key()),
+            lambda: [F.col("id_a"), F.col("id_b"), model.score_expr().alias("score")],
         )
-        hyd = P.hydrate_two(cand, slim_m, self._slim, fields)
-        withd = dd._features_from_hydrated(hyd)
-        return dd.model.score(withd).select("id_a", "id_b", "score")
+        return model.distance_frame(hyd).select(*scored)
 
     def search(self, messy_records: DataFrame, n_matches: int = 2) -> DataFrame:
         """≙ gazetteer.search(messy, n_matches) — top-n canonical matches per
         messy record (gazetteer_example/gazetteer_example.py:159).
         Returns (messy_id, canonical_id, score, rank)."""
-        rank, keep, out = session_expr(("gazetteer_rank", n_matches), lambda: _rank_columns(n_matches))
-        return self._scored(messy_records).withColumn("rank", rank).filter(keep).select(*out)
+        out, keep = session_expr(("gazetteer_top", n_matches), lambda: _top_columns(n_matches))
+        return self._scored(messy_records).select(*out).filter(keep)
 
     def match(self, messy_records: DataFrame, threshold: float | None = None) -> DataFrame:
         """≙ gazetteer.match — best match above threshold
-        (gazetteer_postgres_example.py:309). (messy_id, canonical_id, score)."""
+        (gazetteer_postgres_example.py:309). (messy_id, canonical_id, score).
+
+        The threshold is applied with the rank-1 filter, above the rank
+        window: a score filter below it would be pushed into the scoring
+        projection and evaluate every scoring UDF a second time."""
         t = self.threshold if threshold is None else threshold
-        return (
-            self.search(messy_records, n_matches=1)
-            .filter(F.col("score") >= t)
-            .select("messy_id", "canonical_id", "score")
+        above, out = session_expr(
+            ("gazetteer_match", t),
+            lambda: (F.col("score") >= t, [F.col("messy_id"), F.col("canonical_id"), F.col("score")]),
         )
+        return self.search(messy_records, n_matches=1).filter(above).select(*out)
 
     def apply_matches(self, messy_records: DataFrame, matches: DataFrame) -> tuple[DataFrame, DataFrame]:
         """The write-back pair of gazetteer_postgres_example.py:313-345:

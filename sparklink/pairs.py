@@ -50,7 +50,7 @@ def candidate_pairs_cross(bm_left: DataFrame, bm_right: DataFrame) -> DataFrame:
     return l.join(r, "block_key").select("id_a", "id_b").dropDuplicates(["id_a", "id_b"])
 
 
-def _side(records: DataFrame, fields: list[str], id_col: str, side: str) -> DataFrame:
+def hydration_side(records: DataFrame, fields: list[str], id_col: str, side: str) -> DataFrame:
     """records -> (id_<side>, <field>_<side>...), the projection built once
     per session (session.session_expr)."""
     key = ("hydrate_side", tuple(fields), id_col, side)
@@ -64,12 +64,6 @@ def hydrate(pairs: DataFrame, records: DataFrame, fields: list[str], id_col: str
     """Join field payloads for both sides (the reference's double hydration
     join, mysql_example/mysql_example.py:261-262). Only requested fields are
     selected pre-join so parquet column pruning survives."""
-    return hydrate_two(pairs, records, records, fields, id_col)
-
-
-def hydrate_two(
-    pairs: DataFrame, left: DataFrame, right: DataFrame, fields: list[str], id_col: str = "conv_id"
-) -> DataFrame:
-    a = _side(left, fields, id_col, "a")
-    b = _side(right, fields, id_col, "b")
+    a = hydration_side(records, fields, id_col, "a")
+    b = hydration_side(records, fields, id_col, "b")
     return pairs.join(a, "id_a").join(b, "id_b")

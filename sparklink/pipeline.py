@@ -18,7 +18,7 @@ import os
 from dataclasses import dataclass, field
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sparklink import blocking as B
@@ -54,6 +54,20 @@ def _input_fingerprint(df: DataFrame) -> str:
     except Exception:
         plan_hash = df._jdf.queryExecution().analyzed().semanticHash()
     return _fingerprint({"plan": plan_hash, "n_files": len(files), "files": sized})
+
+
+def _renamed_arrays(vecs: DataFrame, id_name: str, column: str, suffix: str) -> DataFrame:
+    """tf-idf arrays (record_id, tfh, tfw) of ``column`` as hydration
+    fields (``id_name``, tfh_<column><suffix>, tfw_<column><suffix>)."""
+    cols = session_expr(
+        ("tfidf_fields", id_name, column, suffix),
+        lambda: [
+            F.col("record_id").alias(id_name),
+            F.col("tfh").alias(f"tfh_{column}{suffix}"),
+            F.col("tfw").alias(f"tfw_{column}{suffix}"),
+        ],
+    )
+    return vecs.select(*cols)
 
 
 def default_transcript_model() -> FieldModel:
@@ -138,7 +152,7 @@ class SparkDedupe:
         self._drop_tf_cache()
         toks, tf, dfreq = B.partitioned_token_stats(records, column)
         self._held_frames = getattr(self, "_held_frames", []) + [tf]
-        vocab = B.record_token_vocab(tf, dfreq).persist()
+        vocab = B.record_token_vocab(tf, F.broadcast(dfreq)).persist()
         n_docs = records.count()
         self._tf_cache = (records, column, toks, vocab, n_docs)
         return toks, vocab, n_docs
@@ -215,41 +229,43 @@ class SparkDedupe:
                 )
         return bm
 
-    def _slim_base(self, records: DataFrame) -> tuple[DataFrame, list[str]]:
-        """(slim frame, non-text field list): the hydration payload before
-        tf-idf arrays — 64-char prefixes for string-kernel columns so the
-        full text never crosses the hydration shuffle."""
-        fields = sorted({v.column for v in self.model.variables if v.kind != "text"})
-        string_cols = {v.column for v in self.model.variables if v.kind in ("string", "shortstring", "levenshtein")}
-        cols = session_expr(
-            ("slim", tuple(fields), frozenset(string_cols)),
+    def _slim_fields(self) -> list[str]:
+        return sorted({v.column for v in self.model.variables if v.kind != "text"})
+
+    def _slim_columns(self, id_name: str, suffix: str) -> list[Column]:
+        """The hydration payload's projection before the tf-idf arrays:
+        ``conv_id`` as ``id_name``, then each non-text field as
+        ``<field><suffix>`` — 64-char prefixes for string-kernel columns so
+        the full text never crosses the hydration shuffle. Built once per
+        session, layout and naming."""
+        fields = tuple(self._slim_fields())
+        string_cols = frozenset(v.column for v in self.model.variables if v.kind in ("string", "shortstring", "levenshtein"))
+        return session_expr(
+            ("slim", fields, string_cols, id_name, suffix),
             lambda: [
-                F.col("conv_id"),
-                *[(F.substring(F.col(f), 1, 64).alias(f) if f in string_cols else F.col(f)) for f in fields],
+                F.col("conv_id").alias(id_name),
+                *[(F.substring(F.col(f), 1, 64) if f in string_cols else F.col(f)).alias(f + suffix) for f in fields],
             ],
         )
-        return records.select(*cols), fields
 
-    def slim_hydration_frame(self, records: DataFrame, vecs_by_col: dict[str, DataFrame]) -> tuple[DataFrame, list[str]]:
-        """(slim frame + tf-idf arrays, hydrated field list): the complete
-        per-record hydration payload given prebuilt tf-idf array frames per
-        text column — the staged-index building block (SparkGazetteer
-        stages this for the canonical side at index() time)."""
-        slim, fields = self._slim_base(records)
-        vec_fields: list[str] = []
+    def hydration_fields(self) -> list[str]:
+        """The hydrated payload's fields in order: the non-text fields, then
+        ``tfh_<col>``, ``tfw_<col>`` per text variable."""
+        text_cols = [v.column for v in self.model.variables if v.kind == "text"]
+        return self._slim_fields() + [f"{a}_{c}" for c in text_cols for a in ("tfh", "tfw")]
+
+    def hydration_payload(self, records: DataFrame, vecs_by_col: dict[str, DataFrame], id_name: str, suffix: str) -> DataFrame:
+        """The complete per-record hydration payload, given prebuilt tf-idf
+        array frames per text column: ``conv_id`` as ``id_name`` and every
+        :meth:`hydration_fields` entry with ``suffix`` appended. The
+        building block of both hydration sides, and of the canonical side
+        SparkGazetteer stages at index() time."""
+        payload = records.select(*self._slim_columns(id_name, suffix))
         for v in self.model.variables:
-            if v.kind != "text":
-                continue
-            slim = slim.join(
-                vecs_by_col[v.column]
-                .withColumnRenamed("record_id", "conv_id")
-                .withColumnRenamed("tfh", f"tfh_{v.column}")
-                .withColumnRenamed("tfw", f"tfw_{v.column}"),
-                "conv_id",
-                "left",
-            )
-            vec_fields += [f"tfh_{v.column}", f"tfw_{v.column}"]
-        return slim, fields + vec_fields
+            if v.kind == "text":
+                arrays = _renamed_arrays(vecs_by_col[v.column], id_name, v.column, suffix)
+                payload = payload.join(arrays, id_name, "left")
+        return payload
 
     def _hydrate_pairs(self, records: DataFrame, pairs: DataFrame) -> DataFrame:
         """pairs(id_a, id_b[, label]) -> hydrated pair frame (pre-distance).
@@ -259,7 +275,7 @@ class SparkDedupe:
         tf-idf token-hash/weight arrays for Text comparators, whose cosine
         is a per-row Arrow-batched sparse dot — no pairs-x-tokens shuffle.
         This is the shuffle-heavy JVM half of pair scoring; the CPU-bound
-        Arrow/pandas half is ``_features_from_hydrated``. Keeping them
+        Arrow/pandas half is ``FieldModel.distance_frame``. Keeping them
         separable lets a cluster stage the hydrated frame to storage and
         run the scoring stage on a differently-sized fleet (the shape
         bench.py's N-vs-4N executor proxy measures).
@@ -281,7 +297,7 @@ class SparkDedupe:
                 vecs_by_col[v.column] = D.tfidf_token_arrays_from_vocab(cached[3], cached[4])
             else:
                 vecs_by_col[v.column] = D.tfidf_token_arrays(records, v.column)
-        slim, fields = self.slim_hydration_frame(records, vecs_by_col)
+        slim, fields = self.hydration_payload(records, vecs_by_col, "conv_id", ""), self.hydration_fields()
         if text_vars:
             # both hydration sides read the slim frame; materialize it so
             # the tf-idf array build (vocab sort/slice/normalize chain)
@@ -289,28 +305,9 @@ class SparkDedupe:
             slim = slim.localCheckpoint(eager=True)
         return P.hydrate(pairs, slim, fields)
 
-    def _features_from_hydrated(self, hyd: DataFrame) -> DataFrame:
-        """Hydrated pair frame -> + all model distance columns (the
-        CPU-bound Arrow/pandas scoring stage; see ``_hydrate_pairs``)."""
-        from sparklink.score import sparse_dot_udf
-
-        withd = self.model.distance_frame(hyd)
-        for v in self.model.variables:
-            if v.kind != "text":
-                continue
-            c = v.column
-            cosine = session_expr(
-                ("sparse_dot", c),
-                lambda: sparse_dot_udf(
-                    F.col(f"tfh_{c}_a"), F.col(f"tfw_{c}_a"), F.col(f"tfh_{c}_b"), F.col(f"tfw_{c}_b")
-                ),
-            )
-            withd = withd.withColumn(v.dist_col, cosine)
-        return withd
-
     def _pair_features(self, records: DataFrame, pairs: DataFrame) -> DataFrame:
         """pairs(id_a, id_b[, label]) -> + all model distance columns."""
-        return self._features_from_hydrated(self._hydrate_pairs(records, pairs))
+        return self.model.distance_frame(self._hydrate_pairs(records, pairs))
 
     def hydrated_pairs(
         self, records: DataFrame, bm: DataFrame, pair_slice: tuple[int, int] | None = None
@@ -330,7 +327,7 @@ class SparkDedupe:
         LR score. Equivalent to the tail of ``scored_pairs`` (regression-
         tested identical); accepts extra columns (e.g. a slice id) and
         drops them."""
-        withd = self._features_from_hydrated(hyd)
+        withd = self.model.distance_frame(hyd)
         return self.model.score(withd).select(
             "id_a", "id_b", *self.model.feature_cols(), "score"
         )

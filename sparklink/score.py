@@ -304,8 +304,8 @@ class Variable:
     plugin's CRF behavior). Downstream component comparators are identical
     for both parsers, so feature layout and weights are parser-portable.
 
-    has_missing is forced False for 'text': its cosine is attached as a
-    DataFrame sub-plan whose missing sides are imputed 0 inside the kernel,
+    has_missing is forced False for 'text': its cosine reads the hydrated
+    tf-idf arrays, whose missing sides are imputed 0 inside the kernel,
     and no raw column is hydrated to derive a dummy from (a True value
     would emit a feature column nothing creates -> AnalysisException).
     """
@@ -393,22 +393,32 @@ class FieldModel:
 
         Column-expression comparators stay in whole-stage codegen; string
         comparators go through one vectorized pandas UDF each; 'text'
-        variables get their cosine from the caller
-        (``SparkDedupe._features_from_hydrated``: a sparse dot over the
-        hydrated tf-idf arrays) under their dist_col.
+        variables get the sparse-dot cosine of the hydrated tf-idf arrays
+        (``tfh_<col>_a``/``tfw_<col>_a`` and the ``_b`` pair).
 
-        The columns depend only on the variable layout, so they are built
-        once per session and layout (session.session_expr) and re-applied.
+        One ``withColumns`` per dependency level: the first adds every
+        column computed from the hydrated fields, the next those that read
+        first-level columns (name/address blends, interactions), and so
+        on. The columns depend only on the variable layout, so they are
+        built once per session and layout (session.session_expr) and
+        re-applied.
         """
         out = hydrated
-        for name, col in session_expr(("distances", self._layout_key()), self._distance_columns):
-            out = out.withColumn(name, col)
+        for level in session_expr(("distances", self._layout_key()), self._distance_columns):
+            out = out.withColumns(dict(level))
         return out
 
-    def _distance_columns(self) -> list[tuple[str, Column]]:
-        """(name, expression) pairs distance_frame adds, in order; later
-        expressions may read earlier columns."""
+    def _distance_columns(self) -> list[list[tuple[str, Column]]]:
+        """(name, expression) pairs distance_frame adds, grouped by
+        dependency level; an expression reads only hydrated fields and
+        columns of earlier levels."""
         out: list[tuple[str, Column]] = []
+        level: dict[str, int] = {}
+
+        def add(name: str, col: Column, reads: tuple[str, ...] = ()) -> None:
+            level[name] = 1 + max((level.get(r, 0) for r in reads), default=0)
+            out.append((name, col))
+
         for v in self.variables:
             l, r = F.col(v.column + "_a"), F.col(v.column + "_b")
             missing = l.isNull() | r.isNull()
@@ -419,9 +429,9 @@ class FieldModel:
                 # values outside the declared set behave as baseline
                 for (ca, cb), cname in zip(v.category_combos, v.combo_cols()):
                     hit = ((l == ca) & (r == cb)) | ((l == cb) & (r == ca))
-                    out.append((cname, F.when(missing, F.lit(0.0)).otherwise(hit.cast("double"))))
+                    add(cname, F.when(missing, F.lit(0.0)).otherwise(hit.cast("double")))
                 if v.has_missing:
-                    out.append((f"m_{v.dist_col}", (~missing).cast("double")))
+                    add(f"m_{v.dist_col}", (~missing).cast("double"))
                 continue
             if v.kind == "string":
                 # the DP kernels cap at 48/64 chars — truncate JVM-side so
@@ -465,7 +475,7 @@ class FieldModel:
                     "middle": _middle_score(fl_l["middle"], fl_r["middle"]),
                 }
                 for cname, ccol in zip(v.component_cols(), (comp[c] for c in v.components)):
-                    out.append((cname, F.when(missing, F.lit(0.0)).otherwise(ccol)))
+                    add(cname, F.when(missing, F.lit(0.0)).otherwise(ccol))
                 # blended mean kept as dist_col for interactions / display
                 # only (NOT a feature — collinear with the components)
                 raw = sum(F.col(c) for c in v.component_cols()) / float(len(v.components))
@@ -496,7 +506,7 @@ class FieldModel:
                     "unit": unit_score,
                 }
                 for cname, ccol in zip(v.component_cols(), (comp[c] for c in v.components)):
-                    out.append((cname, F.when(missing, F.lit(0.0)).otherwise(ccol)))
+                    add(cname, F.when(missing, F.lit(0.0)).otherwise(ccol))
                 # the r1/r2 fixed blend survives as the non-feature
                 # dist_col so interactions keep working
                 raw = (
@@ -505,20 +515,26 @@ class FieldModel:
                     + 0.10 * F.col(f"{v.dist_col}__unit")
                 )
             elif v.kind == "text":
-                # the caller adds the sparse-dot cosine of the hydrated
-                # tf-idf arrays
+                # cosine of the hydrated tf-idf arrays; a missing side's
+                # arrays are empty inside the kernel, so no missing dummy
+                c = v.column
+                add(
+                    v.dist_col,
+                    sparse_dot_udf(F.col(f"tfh_{c}_a"), F.col(f"tfw_{c}_a"), F.col(f"tfh_{c}_b"), F.col(f"tfw_{c}_b")),
+                )
                 continue
             elif v.kind in _COMPARATORS:
                 raw = _COMPARATORS[v.kind](l, r)
             else:
                 raise ValueError(f"unknown comparator kind {v.kind}")
-            out.append((v.dist_col, F.when(missing, F.lit(0.0)).otherwise(raw)))
+            add(v.dist_col, F.when(missing, F.lit(0.0)).otherwise(raw), tuple(v.component_cols()))
             if v.has_missing:
-                out.append((f"m_{v.dist_col}", (~missing).cast("double")))
+                add(f"m_{v.dist_col}", (~missing).cast("double"))
         byname = self._var_by_name()
         for a, b in self.interactions:
-            out.append((f"x_{a}__{b}", F.col(byname[a].dist_col) * F.col(byname[b].dist_col)))
-        return out
+            da, db = byname[a].dist_col, byname[b].dist_col
+            add(f"x_{a}__{b}", F.col(da) * F.col(db), (da, db))
+        return [[(n, c) for n, c in out if level[n] == k] for k in sorted(set(level.values()))]
 
     def _check_layout(self) -> None:
         """weights must align 1:1 with feature_cols() — zip() would
@@ -538,16 +554,20 @@ class FieldModel:
         once per session, layout, weights and bias."""
         assert self.weights is not None, "fit or load the model first"
         self._check_layout()
-        weights = tuple(float(w) for w in self.weights)
-        bias = float(self.bias)
 
         def build() -> Column:
-            z = F.lit(bias)
-            for w, c in zip(weights, self.feature_cols()):
-                z = z + F.lit(w) * F.coalesce(F.col(c), F.lit(0.0))
+            z = F.lit(float(self.bias))
+            for w, c in zip(self.weights, self.feature_cols()):
+                z = z + F.lit(float(w)) * F.coalesce(F.col(c), F.lit(0.0))
             return 1.0 / (1.0 + F.exp(-z))
 
-        return session_expr(("score", self._layout_key(), weights, bias), build)
+        return session_expr(self.score_key(), build)
+
+    def score_key(self) -> tuple:
+        """What score_expr depends on: layout, weights and bias (the
+        session_expr key of anything built from it)."""
+        weights = None if self.weights is None else tuple(float(w) for w in self.weights)
+        return ("score", self._layout_key(), weights, float(self.bias))
 
     def score(self, with_distances: DataFrame) -> DataFrame:
         return with_distances.withColumn("score", self.score_expr())

@@ -296,3 +296,39 @@ def test_match_new_second_batch_reuses_staged_gazetteer(spark, tmp_path):
     # every index table is keyed on the BASE fingerprint -> each resumes
     # once on the second batch (gazetteer_matches is keyed on the batch)
     assert resumed == sorted(GAZETTEER_TABLES), resumed
+
+
+def test_gazetteer_batch_match_equals_bulk_match(spark):
+    """Matching a batch alone gives the bulk match's rows for that batch,
+    also when one block key holds more messy records than max_block_size:
+    only the index side is capped, so a record's matches do not depend on
+    what else arrived with it."""
+    from sparklink.blocking import Predicate, whole_field
+
+    model, threshold = _model_and_threshold()
+    t, _ = make_transcripts(n_entities=6, seed=5)
+    recs = canonicalize(spark.createDataFrame(t)).withColumn("k", F.col("conv_id")).localCheckpoint(eager=True)
+    hot, warm = sorted(r.conv_id for r in recs.select("conv_id").collect())[:2]
+
+    def copies(src: str, prefix: str, n: int):
+        one = recs.filter(F.col("conv_id") == src)
+        return one.crossJoin(spark.range(n)).withColumn("conv_id", F.concat(F.lit(prefix), F.col("id"))).drop("id")
+
+    # five copies of `hot` share its key k; with max_block_size=3 that
+    # messy block is oversized in bulk, while each canonical block is a
+    # single record
+    messy = copies(hot, "m", 5).unionByName(copies(warm, "n", 2)).localCheckpoint(eager=True)
+    gaz = SparkGazetteer(
+        model=model, threshold=threshold, predicates=[Predicate("k", "k", whole_field)], max_block_size=3
+    )
+    gaz.index(recs)
+
+    def rows(df):
+        return sorted((r.messy_id, r.canonical_id, r.score) for r in df.collect())
+
+    bulk = rows(gaz.match(messy))
+    batches = [["m0", "m1", "n0"], ["m2", "m3", "m4", "n1"]]
+    alone = sorted(r for ids in batches for r in rows(gaz.match(messy.filter(F.col("conv_id").isin(ids)))))
+    gaz.unindex()
+    assert alone == bulk
+    assert {r[0]: r[1] for r in bulk} == {**{f"m{i}": hot for i in range(5)}, "n0": warm, "n1": warm}

@@ -199,3 +199,48 @@ def test_repeated_match_compiles_few_classes(spark, gazetteer):
     _match_batch(spark, gaz, batches[0], sink, 11)
     compiled = metrics.METRIC_COMPILATION_TIME().getCount() - before
     assert compiled <= 5, f"{compiled} codegen compiles for a repeated batch"
+
+
+def test_warm_match_budget(spark, gazetteer):
+    """A warm batch's fixed cost: building ``match`` takes at most 250
+    py4j round trips (about 410 before the index-side frames were built
+    once and the messy side took one operation per step), the match plus
+    its parquet write runs at most 8 Spark jobs (12 with the messy-side
+    block cap), and the executed plan evaluates the scoring UDFs in one
+    ArrowEvalPython."""
+    import threading
+
+    gaz, batches, sink = gazetteer
+    sc = spark.sparkContext
+    _match_batch(spark, gaz, batches[0], sink, 20)
+    records = canonicalize(spark.read.parquet(batches[1]))
+    client = type(sc._gateway._gateway_client)
+    send = client.send_command
+    calls = [0]
+    me = threading.get_ident()
+
+    def counting(self, *args, **kwargs):
+        # py4j's finalizer thread releases garbage-collected proxies
+        # through the same client; those are not this build's round trips
+        calls[0] += threading.get_ident() == me
+        return send(self, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        matches = gaz.match(records)
+    finally:
+        client.send_command = send
+    assert calls[0] <= 250, f"{calls[0]} py4j round trips to build match"
+
+    group = "test-warm-match-budget"
+    sc.setJobGroup(group, group)
+    try:
+        matches.withColumn("batch_id", F.lit(21)).write.mode("append").parquet(sink)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 8, f"{len(jobs)} Spark jobs for a warm match and write"
+
+    matches.collect()
+    plan = matches._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+    assert plan.count("ArrowEvalPython") == 1, plan
