@@ -69,15 +69,15 @@ def main_er_dissect() -> None:
 
     # blocking subparts
     _timed(spark, "predicate_keys", lambda: B.build_blocking_map(records, dd.predicates), t)
-    toks, vocab, n_docs = dd._token_stats(records)
-    _timed(spark, "token_stats_vocab", lambda: vocab, t)
+    st = dd._token_stats(records)
+    _timed(spark, "token_stats_vocab", lambda: st.vocab, t)
     _timed(
         spark,
         "canopy_keys",
-        lambda: B.tfidf_canopy_keys_from_vocab(vocab, n_docs, "conv_text", top_m=4),
+        lambda: B.tfidf_canopy_keys_from_vocab(st.vocab, st.n_docs, "conv_text", top_m=4),
         t,
     )
-    _timed(spark, "minhash_band_keys", lambda: B.minhash_band_keys_from_tokens(toks), t)
+    _timed(spark, "minhash_band_keys", lambda: B.minhash_band_keys_from_tokens(st.toks), t)
     t0 = time.time()
     bm = dd.blocking_map(records)
     bm = bm.localCheckpoint(eager=True)

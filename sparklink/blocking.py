@@ -18,7 +18,11 @@ Scale controls (BASELINE.json north_rule: "skew handled explicitly"):
 - Index predicates (TF-IDF canopy, minhash bands; SURVEY.md §2.3) derive
   from one shared token-stats frame: ``partitioned_token_stats`` ->
   ``record_token_vocab`` -> ``tfidf_canopy_keys_from_vocab``, and
-  ``minhash_band_keys_from_tokens`` over the same token arrays.
+  ``minhash_band_keys_from_tokens`` over the same token arrays. A corpus
+  is tokenized only there, through ``SparkDedupe._token_stats``, whose
+  memo also feeds every corpus-side tf-idf payload (batch scoring, fit,
+  record linkage, the gazetteer index); ``token_tf`` is the lazy tf of a
+  gazetteer batch.
 """
 
 from __future__ import annotations
@@ -32,7 +36,6 @@ from pyspark.sql import functions as F
 from sparklink.dedup import band_keys, kmin_signatures, word_shingles_from_tokens
 from sparklink.preprocess import tokens
 from sparklink.session import session_expr
-from sparklink.util import widen_to_parallelism
 
 # --------------------------------------------------------------------------
 # Predicate catalog (dedupe predicates.py family, re-expressed as Columns)
@@ -174,30 +177,10 @@ def blocking_stats(blocking_map: DataFrame, key_col: str = "block_key", id_col: 
 # --------------------------------------------------------------------------
 
 
-def token_stats(records: DataFrame, column: str, id_col: str = "conv_id") -> tuple[DataFrame, DataFrame, DataFrame]:
-    """ONE tokenization over ``column`` -> (toks, tf, dfreq):
-    toks(record_id, toks array<string>) — the materialized ordered token
-    array (shingle builders derive from it without re-tokenizing);
-    tf(record_id, token, tf); dfreq(token, df). Persist toks and tf at the
-    call site when more than one consumer derives from them.
-
-    Lowercases before tokenizing: tokens() splits on [^0-9a-z]+, so
-    uppercase letters would act as separators and mangle tokens/shingles
-    for any caller whose column is not pre-lowercased (r2 ADVICE — the
-    pipeline's conv_text happens to be lowered by clean_text, which masked
-    this for other callers). Idempotent on already-lowered input."""
-    recs = widen_to_parallelism(records)
-    c = _token_columns(column, id_col)
-    toks = recs.select(c.record_id, c.toks)
-    tf = token_tf(recs, column, id_col)
-    dfreq = tf.groupBy("token").agg(c.df)
-    return toks, tf, dfreq
-
-
 def token_tf(records: DataFrame, column: str, id_col: str = "conv_id") -> DataFrame:
-    """(record_id, token, tf), tokenized like :func:`token_stats` and
-    exploded straight from ``column``: the tf frame for callers that need
-    no token array."""
+    """(record_id, token, tf), tokenized like :func:`partitioned_token_stats`
+    but lazy and exploded straight from ``column``: the tf frame of a
+    gazetteer batch, which needs no token array and no persisted layout."""
     c = _token_columns(column, id_col)
     return records.select(c.record_id, c.token).groupBy(*c.tf_keys).agg(c.tf)
 
@@ -213,7 +196,13 @@ class _TokenColumns(NamedTuple):
 
 
 def _token_columns(column: str, id_col: str) -> _TokenColumns:
-    """The expressions of the token-stats builders, built once per session."""
+    """The expressions of the token-stats builders, built once per session.
+
+    Lowercases before tokenizing: tokens() splits on [^0-9a-z]+, so
+    uppercase letters would act as separators and mangle tokens/shingles
+    for any caller whose column is not pre-lowercased (r2 ADVICE — the
+    pipeline's conv_text happens to be lowered by clean_text, which masked
+    this for other callers). Idempotent on already-lowered input."""
 
     def build() -> _TokenColumns:
         toks = tokens(F.lower(F.col(column)))
@@ -232,11 +221,13 @@ def _token_columns(column: str, id_col: str) -> _TokenColumns:
 
 def partitioned_token_stats(
     records: DataFrame, column: str, id_col: str = "conv_id"
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(toks, tf, dfreq) like :func:`token_stats`, with toks and tf
-    persisted HASH-PARTITIONED BY record_id and eagerly materialized — the
-    r6 layout both the batch pipeline and the gazetteer index build share.
-    dfreq stays lazy over the persisted tf.
+) -> tuple[DataFrame, DataFrame, DataFrame, int]:
+    """ONE tokenization of a corpus column -> (toks, tf, dfreq, n_docs):
+    toks(record_id, toks array<string>), the ordered token array shingle
+    builders derive from; tf(record_id, token, tf); dfreq(token, df); and
+    the corpus size. toks and tf are persisted HASH-PARTITIONED BY
+    record_id and eagerly materialized; dfreq stays lazy over the
+    persisted tf. SparkDedupe._token_stats is its one caller.
 
     Partitioning the token arrays BEFORE the explode means the
     (record, token) tf aggregate, the per-record vocab collect
@@ -246,16 +237,17 @@ def partitioned_token_stats(
     exploded token rows (~30-200x more of them) once per consumer. The
     eager counts matter — an unmaterialized AQE-cached plan reports
     unknown partitioning, and consumers planned against it would
-    re-insert the exchanges. Callers own unpersisting toks and tf.
+    re-insert the exchanges. toks holds one row per record, so its count
+    is the corpus size. Callers own unpersisting toks and tf.
     """
     c = _token_columns(column, id_col)
     toks = records.select(c.record_id, c.toks).repartition("record_id")
     toks = toks.persist()
-    toks.count()
+    n_docs = toks.count()
     tf = toks.select(c.tf_keys[0], c.toks_token).groupBy(*c.tf_keys).agg(c.tf)
     tf = tf.persist()
     tf.count()
-    return toks, tf, tf.groupBy("token").agg(c.df)
+    return toks, tf, tf.groupBy("token").agg(c.df), n_docs
 
 
 def record_token_vocab(tf: DataFrame, dfreq: DataFrame) -> DataFrame:

@@ -26,7 +26,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
-from sparklink.blocking import ranked_vocab, record_token_vocab, token_stats
+from sparklink.blocking import ranked_vocab
 from sparklink.session import session_expr
 
 # Rows per cache block in the DP kernels. At Arrow's 10k-row default
@@ -352,33 +352,6 @@ def rel_num_diff(l: Column, r: Column) -> Column:
 # --------------------------------------------------------------------------
 
 
-def tfidf_token_arrays(
-    records: DataFrame,
-    column: str,
-    id_col: str = "conv_id",
-    top_m: int = 48,
-    max_df_frac: float = 0.5,
-) -> DataFrame:
-    """(record_id, tfh array<int> sorted, tfw array<float> aligned):
-    L2-normalized tf-idf weights for the record's top_m tokens, token
-    identity as a 31-bit xxhash64, IDF over ``records`` itself.
-
-    This is the scale-path representation for the Text comparator: pair
-    cosine becomes a per-row sorted-merge dot product inside one Arrow
-    batch (distances.sparse_dot) instead of a pairs-x-tokens equi-join
-    (which shuffles |pairs| * avg_tokens rows — the measured bottleneck).
-    Tokens above max_df_frac document frequency are dropped before the cap:
-    they carry near-zero idf weight but dominate join/transfer volume.
-    One tokenization (blocking.token_stats, which lowercases) feeds the
-    per-record vocab that :func:`tfidf_token_arrays_from_vocab` ranks.
-    """
-    n_docs = records.count()
-    _, tf, dfreq = token_stats(records, column, id_col)
-    return tfidf_token_arrays_from_vocab(
-        record_token_vocab(tf, F.broadcast(dfreq)), n_docs, top_m=top_m, max_df_frac=max_df_frac
-    )
-
-
 def _default_token_hash(c: Column) -> Column:
     return F.pmod(F.xxhash64(c), F.lit(1 << 31)).cast("int")
 
@@ -432,8 +405,15 @@ def tfidf_token_arrays_from_vocab(
     max_df_frac: float = 0.5,
     hash_expr=None,
 ) -> DataFrame:
-    """tf-idf token arrays from the collected per-record vocab frame
-    (blocking.record_token_vocab) — no window, no extra shuffle.
+    """(record_id, tfh array<int> sorted, tfw array<float> aligned) from
+    the collected per-record vocab frame (blocking.record_token_vocab) —
+    no window, no extra shuffle. The corpus vocab comes from
+    SparkDedupe._token_stats, the one tokenization of a corpus.
+
+    This is the scale-path representation for the Text comparator: pair
+    cosine becomes a per-row sorted-merge dot product inside one Arrow
+    batch (sparse_dot) instead of a pairs-x-tokens equi-join (which
+    shuffles |pairs| * avg_tokens rows — the measured bottleneck).
 
     Keep the top_m tokens of blocking.ranked_vocab (df <= max_df_frac *
     n_docs, weight tf*log((n+1)/(df+1)), (w desc, token asc)), hash each

@@ -48,6 +48,7 @@ class SparkRecordLink:
     def fit(self, records_all: DataFrame, labeled_pairs: DataFrame, recall_weight: float = 1.0) -> None:
         dd = self._dd()
         dd.fit(records_all, labeled_pairs, recall_weight=recall_weight)
+        dd.release_token_stats()
         self.threshold = dd.threshold
 
     def scored_cross_pairs(self, left: DataFrame, right: DataFrame) -> DataFrame:
@@ -119,7 +120,9 @@ class SparkGazetteer:
     ``gazetteer_index`` (the capped blocking map), ``gazetteer_dfreq_<col>``
     (per-token df of each text column) and ``gazetteer_slim`` (the
     canonical side's COMPLETE hydration payload, 64-char prefixes + tf-idf
-    arrays, one row per record, so its row count is the corpus size) —
+    arrays, one row per record, so its row count is the corpus size; both
+    derive from the one tokenization of the corpus that
+    SparkDedupe._token_stats also gives batch scoring and record linkage) —
     and builds the frames a batch joins from them once: the index as
     ``(block_key, id_b)``, the ``_b``-named hydration side and the
     broadcast dfreq. ``search`` / ``match`` then launch no job over the
@@ -157,18 +160,12 @@ class SparkGazetteer:
     cost: the batch's one scoring task runs 0.27-0.45 s, while the four
     scoring kernels take under 0.1 s for ~600 pairs; the rest is the
     Python task's own start-up (PySpark's ``setup_spark_files``).
-
-    ``broadcast_messy=True`` (default) broadcasts the delta batch's
-    blocking keys into the candidate join so the index side is never
-    shuffled (a daily delta vs a 100 TB index); set False for bulk
-    re-matching where the messy side is itself corpus-sized.
     """
 
     model: FieldModel = field(default_factory=default_transcript_model)
     predicates: list[B.Predicate] = field(default_factory=default_transcript_predicates)
     threshold: float = 0.5
     max_block_size: int = 200
-    broadcast_messy: bool = True
     _index: DataFrame | None = None
     _slim: DataFrame | None = None
     _dfreq: dict | None = None
@@ -188,9 +185,10 @@ class SparkGazetteer:
         are catalog tables — the durable ``indexed_records`` store of
         gazetteer_postgres_example.py:58-76 — so a new process calls
         load_index() and searches without touching the canonical corpus;
-        without one they are persisted in memory."""
-        from sparklink import distances as D
-
+        without one they are persisted in memory. The dfreq and slim
+        tables come from one tokenization of the corpus
+        (SparkDedupe._token_stats), released once they are kept; resuming
+        every table from the catalog tokenizes nothing."""
         self.unindex()
         dd = self._dd()
         if catalog is not None:
@@ -216,51 +214,37 @@ class SparkGazetteer:
                 df.count()
             return df
 
-        # ONE persisted (record, token, tf) frame per text column feeds both
-        # the dfreq and the slim payload, in the record_id-partitioned layout
-        # of pipeline._token_stats, so neither adds an exchange over the corpus
-        stats: dict[str, tuple[DataFrame, DataFrame, DataFrame]] = {}
-
-        def stats_for(col: str) -> tuple[DataFrame, DataFrame, DataFrame]:
-            if col not in stats:
-                stats[col] = B.partitioned_token_stats(canonical_records, col)
-            return stats[col]
-
-        def slim() -> DataFrame:
-            # weighted by the dfreq kept just before
-            vecs_by_col = {
-                col: D.tfidf_token_arrays_from_vocab(
-                    B.record_token_vocab(stats_for(col)[1], F.broadcast(self._dfreq[col])), self._n_docs
-                )
-                for col in self._text_cols()
-            }
-            return dd.hydration_payload(canonical_records, vecs_by_col, "conv_id", "")
-
-        self._n_docs = canonical_records.count()
         self._index = keep(
             "gazetteer_index",
             lambda: B.cap_block_sizes(B.build_blocking_map(canonical_records, self.predicates), self.max_block_size),
             cache=True,
         )
-        self._dfreq = {col: keep(f"gazetteer_dfreq_{col}", lambda c=col: stats_for(c)[2]) for col in self._text_cols()}
-        self._slim = keep("gazetteer_slim", slim)
-        for toks, tf, _ in stats.values():
-            toks.unpersist()
-            tf.unpersist()
-        self._probe = self._probe_frames()
+        self._dfreq = {
+            col: keep(f"gazetteer_dfreq_{col}", lambda c=col: dd._token_stats(canonical_records, c).dfreq)
+            for col in self._text_cols()
+        }
+        self._slim = keep("gazetteer_slim", lambda: dd.corpus_payload(canonical_records))
+        # every kept table is written or cached: the stats have no reader left
+        dd.release_token_stats()
+        self._open()
 
     def load_index(self, catalog) -> None:
         """Resume a previously indexed gazetteer from the catalog's
         ``gazetteer_index``, ``gazetteer_dfreq_<col>`` and
         ``gazetteer_slim`` tables (new process, no re-blocking, no
         canonical-corpus scan — the incremental-matching workflow the
-        reference runs against its indexed_records table). The corpus size
-        is the slim payload's row count: one row per canonical record."""
+        reference runs against its indexed_records table)."""
         self.unindex()
         self._index = catalog.load("gazetteer_index").persist()
         self._index.count()
         self._dfreq = {col: catalog.load(f"gazetteer_dfreq_{col}") for col in self._text_cols()}
         self._slim = catalog.load("gazetteer_slim")
+        self._open()
+
+    def _open(self) -> None:
+        """The tail of index() and load_index(): the corpus size is the
+        slim payload's row count (one row per canonical record), and the
+        frames every batch joins are built once."""
         self._n_docs = self._slim.count()
         self._probe = self._probe_frames()
 
@@ -303,11 +287,7 @@ class SparkGazetteer:
         # the messy side is a delta batch probing a (potentially 100 TB)
         # index: broadcast its keys so the index is never shuffled by the
         # candidate join (guide §3.1)
-        cand = (
-            (F.broadcast(keys_a) if self.broadcast_messy else keys_a)
-            .join(probe.keys, "block_key")
-            .dropDuplicates(["id_a", "id_b"])
-        )
+        cand = F.broadcast(keys_a).join(probe.keys, "block_key").dropDuplicates(["id_a", "id_b"])
         # messy-side payload only: fresh tf over the delta, weighted by the
         # STAGED canonical df / corpus size — no canonical-side job
         vecs_by_col = {
@@ -319,7 +299,7 @@ class SparkGazetteer:
         side_a = dd.hydration_payload(messy_records, vecs_by_col, "id_a", "_a")
         # the batch's payload is the broadcast side: broadcasting the
         # candidates instead costs one more job
-        hyd = cand.join(F.broadcast(side_a) if self.broadcast_messy else side_a, "id_a").join(probe.side_b, "id_b")
+        hyd = cand.join(F.broadcast(side_a), "id_a").join(probe.side_b, "id_b")
         model = dd.model
         scored = session_expr(
             ("gazetteer_scored", model.score_key()),

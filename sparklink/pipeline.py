@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -92,6 +93,17 @@ def default_transcript_predicates() -> list[B.Predicate]:
     ]
 
 
+class _TokenStats(NamedTuple):
+    """One text column's token statistics over a records frame
+    (blocking.partitioned_token_stats plus the per-record vocab)."""
+
+    toks: DataFrame  # (record_id, toks), persisted, partitioned by record_id
+    tf: DataFrame  # (record_id, token, tf), persisted
+    dfreq: DataFrame  # (token, df), lazy over tf
+    vocab: DataFrame  # (record_id, vocab), persisted
+    n_docs: int
+
+
 @dataclass
 class SparkDedupe:
     model: FieldModel = field(default_factory=default_transcript_model)
@@ -106,32 +118,42 @@ class SparkDedupe:
     # skips are logged to the catalog's metrics table when one is attached
     max_component: int = 2000
     catalog: Catalog | None = None
+    # each stage's fingerprint by name (see _stage)
+    _chain: dict[str, str] = field(default_factory=dict, init=False, repr=False)
+    # _token_stats' memo: the records frame it holds, one entry per text column
+    _stats_records: DataFrame | None = field(default=None, init=False, repr=False)
+    _stats: dict[str, _TokenStats] = field(default_factory=dict, init=False, repr=False)
+    # persisted frames freed as soon as a stage write has read them: each
+    # column's tf and the uncapped blocking map
+    _held_frames: list[DataFrame] = field(default_factory=list, init=False, repr=False)
 
     # ---- stages ----------------------------------------------------------
     # Fingerprints chain: each stage's params embed the upstream stage's
     # fingerprint (and the root stage embeds the input-data fingerprint),
     # so changing the input, predicates, flags, or model invalidates every
     # stage downstream — never a silent resume of stale parquet.
-    def _stage(self, name: str, params: dict, thunk, partition_by=None) -> DataFrame:
-        if not hasattr(self, "_chain"):
-            self._chain: dict[str, str] = {}
+    def _stage(self, name: str, params: dict, thunk) -> DataFrame:
         self._chain[name] = _fingerprint(params)
         if self.catalog is None:
             return thunk()
-        return self.catalog.stage(name, params, thunk, partition_by=partition_by)
+        return self.catalog.stage(name, params, thunk)
 
     def _upstream(self, name: str) -> str:
-        return getattr(self, "_chain", {}).get(name, "unchained")
+        return self._chain.get(name, "unchained")
 
     def canonical_records(self, transcripts: DataFrame) -> DataFrame:
         params = {"stage": "canonicalize", "input": _input_fingerprint(transcripts)}
         return self._stage("records", params, lambda: canonicalize(transcripts))
 
-    def _token_stats(self, records: DataFrame, column: str = "conv_text"):
-        """Shared token-stats frames (one explode) reused across canopy
-        keys, minhash band keys, and the scorer's tf-idf vectors —
-        memoized per records frame (r1 bench: the three separate explodes
-        were 56% of pipeline wall time).
+    def _token_stats(self, records: DataFrame, column: str = "conv_text") -> _TokenStats:
+        """The one tokenization of a corpus column: toks, tf, dfreq, the
+        per-record vocab and n_docs, shared by canopy keys, minhash band
+        keys and every corpus-side tf-idf payload (batch scoring, fit,
+        label_session, record linkage, the gazetteer index's dfreq and
+        slim tables) — memoized per records frame, one entry per text
+        column (r1 bench: separate explodes were 56% of pipeline wall
+        time). A new records frame releases everything held for the old
+        one first.
 
         r6 shape: the token-array frame is persisted HASH-PARTITIONED BY
         record_id, so every downstream aggregate keyed on record_id — the
@@ -144,18 +166,20 @@ class SparkDedupe:
         moves ~n_records array rows instead of the exploded token rows
         (~30-200x more of them) that the r5 shape shuffled twice more.
         Canopy keys and tf-idf arrays rank array-side over the vocab,
-        replacing their two window shuffles+sorts. Returns
-        (toks, vocab, n_docs)."""
-        cached = getattr(self, "_tf_cache", None)
-        if cached is not None and cached[0] is records and cached[1] == column:
-            return cached[2], cached[3], cached[4]
-        self._drop_tf_cache()
-        toks, tf, dfreq = B.partitioned_token_stats(records, column)
-        self._held_frames = getattr(self, "_held_frames", []) + [tf]
-        vocab = B.record_token_vocab(tf, F.broadcast(dfreq)).persist()
-        n_docs = records.count()
-        self._tf_cache = (records, column, toks, vocab, n_docs)
-        return toks, vocab, n_docs
+        replacing their two window shuffles+sorts.
+
+        Release: with a catalog, blocking_map frees the tf frames and the
+        uncapped map once its stage is written and partition frees the
+        rest after scored_pairs; otherwise call release_token_stats()."""
+        if records is not self._stats_records:
+            self.release_token_stats()
+            self._stats_records = records
+        if column not in self._stats:
+            toks, tf, dfreq, n_docs = B.partitioned_token_stats(records, column)
+            self._held_frames.append(tf)
+            vocab = B.record_token_vocab(tf, F.broadcast(dfreq)).persist()
+            self._stats[column] = _TokenStats(toks, tf, dfreq, vocab, n_docs)
+        return self._stats[column]
 
     def release_token_stats(self) -> None:
         """Unpersist the shared token-stats frames. Call once scored_pairs
@@ -164,28 +188,23 @@ class SparkDedupe:
         stage wastes executor memory (at scale: eviction/spill pressure).
         Releasing earlier would silently recompute the whole explode inside
         the next job that references a lazy scored-pairs frame."""
-        self._drop_tf_cache()
-        for df in getattr(self, "_held_frames", []):
+        for st in self._stats.values():
+            st.toks.unpersist()
+            st.vocab.unpersist()
+        for df in self._held_frames:
             df.unpersist()
-        self._held_frames = []
-
-    def _drop_tf_cache(self) -> None:
-        cached = getattr(self, "_tf_cache", None)
-        if cached is not None:
-            cached[2].unpersist()
-            cached[3].unpersist()
-            self._tf_cache = None
+        self._stats_records, self._stats, self._held_frames = None, {}, []
 
     def blocking_map(self, records: DataFrame) -> DataFrame:
         def thunk():
             bm = B.build_blocking_map(records, self.predicates)
-            toks, vocab, n_docs = self._token_stats(records)
-            bm = bm.unionByName(B.tfidf_canopy_keys_from_vocab(vocab, n_docs, "conv_text", top_m=4))
+            st = self._token_stats(records)
+            bm = bm.unionByName(B.tfidf_canopy_keys_from_vocab(st.vocab, st.n_docs, "conv_text", top_m=4))
             # recall backstop: hard-noised members can lose first-turn
             # tokens entirely, defeating prefix/token predicates, and
             # canopy keys of common tokens die at the block cap; minhash
             # bands key on whole-text word-shingle similarity instead
-            bm = bm.unionByName(B.minhash_band_keys_from_tokens(toks))
+            bm = bm.unionByName(B.minhash_band_keys_from_tokens(st.toks))
             # cap_block_sizes reads its input twice (skew-safe sizes agg +
             # anti-join probe); persist the uncapped map so the explode-
             # heavy predicate/canopy/band plan above is evaluated ONCE
@@ -193,7 +212,7 @@ class SparkDedupe:
             # (block_key, record_id) rows — cheap to hold; released with
             # the token stats once downstream is materialized.
             bm = bm.persist()
-            self._held_frames = getattr(self, "_held_frames", []) + [bm]
+            self._held_frames.append(bm)
             return B.cap_block_sizes(bm, self.max_block_size)
 
         params = {
@@ -208,7 +227,7 @@ class SparkDedupe:
             # nothing downstream reads the uncapped persist — free it now
             # (the no-catalog path keeps it until release_token_stats(),
             # since the returned plan still references it lazily)
-            for df in getattr(self, "_held_frames", []):
+            for df in self._held_frames:
                 df.unpersist()
             self._held_frames = []
         if self.catalog is not None and fresh:
@@ -267,6 +286,18 @@ class SparkDedupe:
                 payload = payload.join(arrays, id_name, "left")
         return payload
 
+    def corpus_payload(self, records: DataFrame) -> DataFrame:
+        """``records``' own hydration payload (``conv_id`` plus every
+        :meth:`hydration_fields` entry), its tf-idf arrays ranked over the
+        memoized :meth:`_token_stats` of ``records``: the slim frame both
+        hydration sides read, and SparkGazetteer's ``gazetteer_slim``."""
+        vecs_by_col = {}
+        for v in self.model.variables:
+            if v.kind == "text":
+                st = self._token_stats(records, v.column)
+                vecs_by_col[v.column] = D.tfidf_token_arrays_from_vocab(st.vocab, st.n_docs)
+        return self.hydration_payload(records, vecs_by_col, "conv_id", "")
+
     def _hydrate_pairs(self, records: DataFrame, pairs: DataFrame) -> DataFrame:
         """pairs(id_a, id_b[, label]) -> hydrated pair frame (pre-distance).
 
@@ -287,21 +318,13 @@ class SparkDedupe:
         # scorer-stage parallelism it was buying is preserved by AQE's
         # parallelismFirst coalescing (post-join partitions target
         # defaultParallelism, not advisory bytes).
-        text_vars = [v for v in self.model.variables if v.kind == "text"]
-        cached = getattr(self, "_tf_cache", None)
-        vecs_by_col = {}
-        for v in text_vars:
-            if cached is not None and cached[0] is records and cached[1] == v.column:
-                # reuse the blocking build's shared per-record vocab (one
-                # collect exchange serves canopy AND these arrays)
-                vecs_by_col[v.column] = D.tfidf_token_arrays_from_vocab(cached[3], cached[4])
-            else:
-                vecs_by_col[v.column] = D.tfidf_token_arrays(records, v.column)
-        slim, fields = self.hydration_payload(records, vecs_by_col, "conv_id", ""), self.hydration_fields()
-        if text_vars:
+        slim, fields = self.corpus_payload(records), self.hydration_fields()
+        if any(v.kind == "text" for v in self.model.variables):
             # both hydration sides read the slim frame; materialize it so
             # the tf-idf array build (vocab sort/slice/normalize chain)
-            # runs once instead of once per side — a few MB of slim rows
+            # runs once instead of once per side — a few MB of slim rows.
+            # The checkpoint also cuts the payload's lineage: releasing the
+            # token stats afterwards never recomputes them.
             slim = slim.localCheckpoint(eager=True)
         return P.hydrate(pairs, slim, fields)
 
@@ -350,6 +373,9 @@ class SparkDedupe:
             *passthrough,
         )
         withd = self._pair_features(lu.unionByName(ru), pu)
+        # the union corpus is private to this call: nothing can reuse its
+        # token stats, and the hydrated payload is already checkpointed
+        self.release_token_stats()
         return withd.withColumn("id_a", F.expr("substring(id_a, 3)")).withColumn(
             "id_b", F.expr("substring(id_b, 3)")
         )

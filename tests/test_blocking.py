@@ -4,6 +4,7 @@ from pyspark.sql import functions as F
 
 from sparklink import blocking as B
 from sparklink.pairs import candidate_pairs
+from sparklink.pipeline import SparkDedupe
 
 
 def _keys(spark, fn, value):
@@ -76,14 +77,18 @@ def test_tfidf_canopy_rare_tokens_win(spark):
         ("c2", "common common rareword1"),
         ("c3", "common common rareword2"),
         ("c4", "common common rareword2"),
-        # token_stats lowercases: uppercase text keys like its lowercase twin
+        # the token stats lowercase: uppercase text keys like its lowercase twin
         ("c5", "Common COMMON RareWord1"),
     ]
     df = spark.createDataFrame(rows, "conv_id string, conv_text string")
-    _, tf, dfreq = B.token_stats(df, "conv_text")
-    vocab = B.record_token_vocab(tf, dfreq)
-    keys = B.tfidf_canopy_keys_from_vocab(vocab, len(rows), "conv_text", top_m=1, max_df_frac=0.9)
-    pdf = keys.toPandas()
+    dd = SparkDedupe()
+    st = dd._token_stats(df, "conv_text")
+    try:
+        assert st.n_docs == len(rows)
+        keys = B.tfidf_canopy_keys_from_vocab(st.vocab, st.n_docs, "conv_text", top_m=1, max_df_frac=0.9)
+        pdf = keys.toPandas()
+    finally:
+        dd.release_token_stats()
     by_rec = dict(zip(pdf.record_id, pdf.block_key))
     assert by_rec["c1"] == by_rec["c2"] == by_rec["c5"] == "canopy(conv_text):rareword1"
     assert by_rec["c3"] == by_rec["c4"]

@@ -79,6 +79,22 @@ def test_recordlink_f1(linked):
     assert f1 >= 0.99, (precision, recall, f1)
 
 
+def test_recordlink_releases_its_token_stats(spark, tmp_path):
+    """fit and join each tokenize their corpus through a SparkDedupe made
+    for the one call, which releases its persisted token stats before
+    returning: the session holds no more cached frames afterwards."""
+    paths = write_fixture(spark, str(tmp_path / "data"), n_entities=30, seed=5, two_sources=True)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    n_before = cache.numCachedEntries()
+    rl = SparkRecordLink()
+    records = rl.canonical(spark.read.parquet(paths["transcripts"]), extra_cols=["source"])
+    rl.fit(records, spark.read.parquet(paths["labeled_pairs"]))
+    left = records.filter(F.col("source") == "a").drop("source")
+    right = records.filter(F.col("source") == "b").drop("source")
+    assert rl.join(left, right).collect()
+    assert cache.numCachedEntries() <= n_before
+
+
 def test_gazetteer_search_and_match(spark, two_source, linked):
     transcripts, truth, labeled = two_source
     rl, records, left, right, matches, _ = linked

@@ -87,11 +87,11 @@ def test_index_predicates_add_no_exchange_over_token_stats(spark, fixture_dfs):
     transcripts, _, _ = fixture_dfs
     records = canonicalize(transcripts).localCheckpoint(eager=True)
     dd = SparkDedupe()
-    toks, vocab, n_docs = dd._token_stats(records)
+    st = dd._token_stats(records)
     try:
-        canopy = B.tfidf_canopy_keys_from_vocab(vocab, n_docs, "conv_text", top_m=4)
-        bands = B.minhash_band_keys_from_tokens(toks)
-        for base, keys in ((vocab, canopy), (toks, bands)):
+        canopy = B.tfidf_canopy_keys_from_vocab(st.vocab, st.n_docs, "conv_text", top_m=4)
+        bands = B.minhash_band_keys_from_tokens(st.toks)
+        for base, keys in ((st.vocab, canopy), (st.toks, bands)):
             plan = _formatted_plan(keys)
             assert plan.count("Exchange") == _formatted_plan(base).count("Exchange"), plan
     finally:

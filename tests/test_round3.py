@@ -258,12 +258,18 @@ def test_tfidf_arrays_collapse_in_row_hash_collisions(spark):
 def test_tfidf_arrays_default_hash_unchanged(spark):
     """No-collision inputs produce identical arrays to the r2 layout
     (sorted by hash, L2-normalized float32 weights)."""
-    from sparklink.distances import tfidf_token_arrays
+    from sparklink.distances import tfidf_token_arrays_from_vocab
+    from sparklink.pipeline import SparkDedupe
 
     recs = spark.createDataFrame(
         [("c1", "alpha beta gamma"), ("c2", "beta gamma delta")], "conv_id string, conv_text string"
     )
-    out = tfidf_token_arrays(recs, "conv_text").toPandas().set_index("record_id")
+    dd = SparkDedupe()
+    st = dd._token_stats(recs, "conv_text")
+    try:
+        out = tfidf_token_arrays_from_vocab(st.vocab, st.n_docs).toPandas().set_index("record_id")
+    finally:
+        dd.release_token_stats()
     for rid in ("c1", "c2"):
         tfh = np.asarray(out.loc[rid, "tfh"])
         assert (np.diff(tfh) > 0).all(), "tfh must be strictly sorted"

@@ -54,27 +54,6 @@ def test_minhash_adds_no_exchange_on_wide_input(spark):
     assert sig_exchanges == base_exchanges + 1, (base_exchanges, sig_exchanges)
 
 
-def test_token_stats_adds_no_exchange_on_wide_input(spark):
-    from sparklink.blocking import token_stats
-
-    par = spark.sparkContext.defaultParallelism
-    wide = spark.range(200).select(
-        F.concat(F.lit("c"), F.col("id")).alias("conv_id"),
-        F.concat(F.lit("alpha beta gamma "), F.col("id")).alias("conv_text"),
-    ).repartition(par)
-    toks, tf, dfreq = token_stats(wide, "conv_text")
-    base = _plan(wide).count("Exchange")
-    assert _plan(toks).count("Exchange") == base  # narrow projection only
-    # oracles stay green: the guard still fires for narrow SCAN-ONLY
-    # inputs (the real sandbox case: byte-small parquet -> 1 partition)
-    narrow = spark.range(200).coalesce(1).select(
-        F.concat(F.lit("c"), F.col("id")).alias("conv_id"),
-        F.concat(F.lit("alpha beta gamma "), F.col("id")).alias("conv_text"),
-    )
-    toks_n, _, _ = token_stats(narrow, "conv_text")
-    assert toks_n.rdd.getNumPartitions() == par
-
-
 # ---------------------------------------------------------------------------
 # FieldModel feature-layout validation (r3 ADVICE, medium)
 # ---------------------------------------------------------------------------

@@ -21,11 +21,13 @@ VOCAB_ROWS = [
 
 
 def _stats(spark):
-    from sparklink.blocking import token_stats
+    """(records, tf, dfreq) built without the engine's token-stats memo,
+    so the references below stay independent of the path under test."""
+    from sparklink.blocking import token_tf
 
     recs = _records(spark, VOCAB_ROWS)
-    toks, tf, dfreq = token_stats(recs, "conv_text")
-    return recs, tf, dfreq
+    tf = token_tf(recs, "conv_text")
+    return recs, tf, tf.groupBy("token").agg(F.count("*").alias("df"))
 
 
 def _tfidf_arrays_windowed(tf, dfreq, n_docs: int, top_m: int = 48, max_df_frac: float = 0.5):
