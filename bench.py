@@ -108,24 +108,24 @@ def run_er_pipeline(spark, fixture: str) -> dict:
     transcripts = spark.read.parquet(f"{fixture}/transcripts.parquet")
     dd = SparkDedupe(model=model, predicates=default_transcript_predicates(), threshold=threshold)
 
-    # stage boundaries use localCheckpoint (materialize + TRUNCATE
-    # lineage), mirroring what the catalog's parquet stages give the
-    # production pipeline. persist() alone keeps the full logical plan:
-    # composed through scoring -> clustering -> evaluation the analyzed
-    # plan reaches millions of characters and the DRIVER spends minutes
-    # in Catalyst analysis + per-AQE-event stringification (measured:
-    # eval alone took 117 s on a 400-entity corpus, constant in data
-    # size). Plan size, not data size, was the cost.
+    # every SparkDedupe stage returns materialized rows (a localCheckpoint
+    # without a catalog), so each timed call below is the whole stage.
+    # The entity map is checkpointed here too: persist() alone keeps the
+    # full logical plan, and composed through clustering -> evaluation the
+    # analyzed plan reaches millions of characters and the DRIVER spends
+    # minutes in Catalyst analysis + per-AQE-event stringification
+    # (measured: eval alone took 117 s on a 400-entity corpus, constant in
+    # data size). Plan size, not data size, was the cost.
     t0 = time.time()
-    records = dd.canonical_records(transcripts).localCheckpoint(eager=True)
+    records = dd.canonical_records(transcripts)
     n_records = records.count()
     t_canon = time.time()
 
-    bm = dd.blocking_map(records).localCheckpoint(eager=True)
+    bm = dd.blocking_map(records)
     n_keys = bm.count()
     t_block = time.time()
 
-    scored = dd.scored_pairs(records, bm).localCheckpoint(eager=True)
+    scored = dd.scored_pairs(records, bm)
     n_pairs = scored.count()
     dd.release_token_stats()  # scored is materialized; free the shared cache
     t_score = time.time()
@@ -1023,7 +1023,7 @@ def main_tenx_incremental() -> None:
     base_t = transcripts.join(delta_ids, "conv_id", "left_anti").localCheckpoint(eager=True)
 
     t0 = time.time()
-    base_records = dd.canonical_records(base_t).localCheckpoint(eager=True)
+    base_records = dd.canonical_records(base_t)
     n_base = base_records.count()
     t_canon = time.time()
     delta_records = canonicalize(delta_t).localCheckpoint(eager=True)
@@ -1039,9 +1039,7 @@ def main_tenx_incremental() -> None:
 
     # match_new needs the existing entity map: built once here (timed
     # separately — a production deployment reads it from the warehouse)
-    em0 = dd.partition(base_t).localCheckpoint(eager=True)
-    em0.count()
-    dd.release_token_stats()
+    em0 = dd.partition(base_t)
     t_em = time.time()
     delta_em = dd.match_new(delta_t, base_records, em0)
     n_delta_rows = _materialize(delta_em)

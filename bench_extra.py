@@ -51,6 +51,7 @@ def main_er_dissect() -> None:
     from sparklink import blocking as B
     from sparklink import distances as D
     from sparklink import pairs as P
+    from sparklink.canonicalize import canonicalize
     from sparklink.cluster import connected_components, entity_map, refine_components
     from sparklink.pipeline import SparkDedupe, default_transcript_predicates
 
@@ -62,9 +63,8 @@ def main_er_dissect() -> None:
     t: dict = {}
 
     _timed(spark, "read_transcripts", lambda: transcripts, t)
+    _timed(spark, "canonicalize_noop", lambda: canonicalize(transcripts), t)
     records = dd.canonical_records(transcripts)
-    _timed(spark, "canonicalize_noop", lambda: records, t)
-    records = records.localCheckpoint(eager=True)
     n = records.count()
 
     # blocking subparts
@@ -78,10 +78,10 @@ def main_er_dissect() -> None:
         t,
     )
     _timed(spark, "minhash_band_keys", lambda: B.minhash_band_keys_from_tokens(st.toks), t)
+    # the stage body, materialized as the stage is; the token stats stay
+    # held until scoring is timed
     t0 = time.time()
-    bm = dd.blocking_map(records)
-    bm = bm.localCheckpoint(eager=True)
-    bm.count()
+    bm = dd._blocking_map_plan(records).localCheckpoint(eager=True)
     t["blocking_full_stage"] = round(time.time() - t0, 2)
 
     _timed(spark, "candidate_pairs", lambda: P.candidate_pairs(bm), t)
@@ -163,24 +163,25 @@ def main_plans(out_dir: str) -> None:
         with open(os.path.join(out_dir, f"{name}.txt"), "w") as f:
             f.write(df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted"))
 
-    # ER pipeline stage plans over the bench fixture
+    # ER pipeline stage plans over the bench fixture: each stage's body,
+    # over the materialized output of the stage before it
+    from sparklink.canonicalize import canonicalize
     from sparklink.pipeline import SparkDedupe, default_transcript_predicates
+
+    def dump(name, df):
+        with open(os.path.join(out_dir, f"er_stage_{name}.txt"), "w") as f:
+            f.write(df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted"))
 
     fixture = bench.ensure_fixture(spark, bench.BENCH_ENTITIES)
     model, threshold = bench.load_static_model()
     dd = SparkDedupe(model=model, predicates=default_transcript_predicates(), threshold=threshold)
     transcripts = spark.read.parquet(f"{fixture}/transcripts.parquet")
+    dump("canonicalize", canonicalize(transcripts))
     records = dd.canonical_records(transcripts)
-    with open(os.path.join(out_dir, "er_stage_canonicalize.txt"), "w") as f:
-        f.write(records._sc._jvm.PythonSQLUtils.explainString(records._jdf.queryExecution(), "formatted"))
-    records = records.localCheckpoint(eager=True)
+    dump("blocking", dd._blocking_map_plan(records))
     bm = dd.blocking_map(records)
-    with open(os.path.join(out_dir, "er_stage_blocking.txt"), "w") as f:
-        f.write(bm._sc._jvm.PythonSQLUtils.explainString(bm._jdf.queryExecution(), "formatted"))
-    bm = bm.localCheckpoint(eager=True)
-    scored = dd.scored_pairs(records, bm)
-    with open(os.path.join(out_dir, "er_stage_scoring.txt"), "w") as f:
-        f.write(scored._sc._jvm.PythonSQLUtils.explainString(scored._jdf.queryExecution(), "formatted"))
+    dump("scoring", dd.score_hydrated(dd.hydrated_pairs(records, bm)))
+    dd.release_token_stats()
     print(json.dumps({"plans": out_dir}))
 
 

@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from sparklink import blocking as B
+from sparklink import distances as D
 from sparklink import pairs as P
 from sparklink.canonicalize import canonicalize
 from sparklink.pipeline import SparkDedupe, default_transcript_model, default_transcript_predicates
@@ -187,8 +188,9 @@ class SparkGazetteer:
         load_index() and searches without touching the canonical corpus;
         without one they are persisted in memory. The dfreq and slim
         tables come from one tokenization of the corpus
-        (SparkDedupe._token_stats), released once they are kept; resuming
-        every table from the catalog tokenizes nothing."""
+        (SparkDedupe._token_stats), released once they are kept; the slim
+        table's tf-idf arrays read the kept dfreq. Resuming every table
+        from the catalog tokenizes nothing."""
         self.unindex()
         dd = self._dd()
         if catalog is not None:
@@ -223,7 +225,18 @@ class SparkGazetteer:
             col: keep(f"gazetteer_dfreq_{col}", lambda c=col: dd._token_stats(canonical_records, c).dfreq)
             for col in self._text_cols()
         }
-        self._slim = keep("gazetteer_slim", lambda: dd.corpus_payload(canonical_records))
+
+        def slim() -> DataFrame:
+            # the memo's tf weighted by the dfreq just kept (as _scored weighs
+            # a batch's tf): the df aggregate is not run again
+            stats = {col: dd._token_stats(canonical_records, col) for col in self._text_cols()}
+            vecs_by_col = {
+                col: D.tfidf_token_arrays_from_vocab(B.record_token_vocab(st.tf, F.broadcast(self._dfreq[col])), st.n_docs)
+                for col, st in stats.items()
+            }
+            return dd.hydration_payload(canonical_records, vecs_by_col, "conv_id", "")
+
+        self._slim = keep("gazetteer_slim", slim)
         # every kept table is written or cached: the stats have no reader left
         dd.release_token_stats()
         self._open()
@@ -267,8 +280,6 @@ class SparkGazetteer:
 
     def _scored(self, messy_records: DataFrame) -> DataFrame:
         """(id_a, id_b, score) of every candidate pair of the batch."""
-        from sparklink import distances as D
-
         probe = self._probe
         assert probe is not None, "call index(canonical) first"
         dd = self._dd()

@@ -6,7 +6,8 @@
   console_label+train) -> blocking_map -> candidate pairs -> hydrate ->
   distances -> score -> threshold -> connected components -> entity_map.
 
-Every stage can route through a checkpoints.Catalog for resumability; the
+Every stage is materialized before the next reads it: a checkpoints.Catalog
+table (resumable) when one is attached, else a localCheckpoint. The
 default transcript field model compares the canonical conversation surface
 (conv_text affine-gap, first_user_text Jaro-Winkler, tools Jaccard,
 n_turns relative diff, conv_text TF-IDF cosine).
@@ -40,8 +41,6 @@ def _input_fingerprint(df: DataFrame) -> str:
     Remote object-store rewrites in-place under identical paths are not
     caught (immutable-file assumption — an Iceberg snapshot id replaces
     this wholesale when the catalog is real)."""
-    import os
-
     files = sorted(df.inputFiles())
     sized = []
     for f in files[:1000]:
@@ -123,8 +122,8 @@ class SparkDedupe:
     # _token_stats' memo: the records frame it holds, one entry per text column
     _stats_records: DataFrame | None = field(default=None, init=False, repr=False)
     _stats: dict[str, _TokenStats] = field(default_factory=dict, init=False, repr=False)
-    # persisted frames freed as soon as a stage write has read them: each
-    # column's tf and the uncapped blocking map
+    # persisted frames freed as soon as the blocking_map stage is
+    # materialized: each column's tf and the uncapped blocking map
     _held_frames: list[DataFrame] = field(default_factory=list, init=False, repr=False)
 
     # ---- stages ----------------------------------------------------------
@@ -133,9 +132,13 @@ class SparkDedupe:
     # so changing the input, predicates, flags, or model invalidates every
     # stage downstream — never a silent resume of stale parquet.
     def _stage(self, name: str, params: dict, thunk) -> DataFrame:
+        """The one place a stage's rows are materialized: a durable catalog
+        table (written or resumed), else an eager, executor-local
+        localCheckpoint. No later action re-runs the stage (the reference
+        writes its tables likewise, mysql_example/mysql_example.py:217-224)."""
         self._chain[name] = _fingerprint(params)
         if self.catalog is None:
-            return thunk()
+            return thunk().localCheckpoint(eager=True)
         return self.catalog.stage(name, params, thunk)
 
     def _upstream(self, name: str) -> str:
@@ -168,9 +171,9 @@ class SparkDedupe:
         Canopy keys and tf-idf arrays rank array-side over the vocab,
         replacing their two window shuffles+sorts.
 
-        Release: with a catalog, blocking_map frees the tf frames and the
-        uncapped map once its stage is written and partition frees the
-        rest after scored_pairs; otherwise call release_token_stats()."""
+        Release: blocking_map frees the tf frames and the uncapped map once
+        its stage is materialized, and partition frees the rest once
+        scored_pairs is."""
         if records is not self._stats_records:
             self.release_token_stats()
             self._stats_records = records
@@ -182,12 +185,12 @@ class SparkDedupe:
         return self._stats[column]
 
     def release_token_stats(self) -> None:
-        """Unpersist the shared token-stats frames. Call once scored_pairs
-        is MATERIALIZED (persisted/checkpointed) — nothing downstream reads
+        """Unpersist the shared token-stats frames. partition calls it once
+        the scored_pairs stage is materialized: nothing downstream reads
         them, and holding ~|tokens| cached rows through the clustering
         stage wastes executor memory (at scale: eviction/spill pressure).
-        Releasing earlier would silently recompute the whole explode inside
-        the next job that references a lazy scored-pairs frame."""
+        A caller that composes the stages itself calls it once it has
+        read the last of them."""
         for st in self._stats.values():
             st.toks.unpersist()
             st.vocab.unpersist()
@@ -195,42 +198,40 @@ class SparkDedupe:
             df.unpersist()
         self._stats_records, self._stats, self._held_frames = None, {}, []
 
-    def blocking_map(self, records: DataFrame) -> DataFrame:
-        def thunk():
-            bm = B.build_blocking_map(records, self.predicates)
-            st = self._token_stats(records)
-            bm = bm.unionByName(B.tfidf_canopy_keys_from_vocab(st.vocab, st.n_docs, "conv_text", top_m=4))
-            # recall backstop: hard-noised members can lose first-turn
-            # tokens entirely, defeating prefix/token predicates, and
-            # canopy keys of common tokens die at the block cap; minhash
-            # bands key on whole-text word-shingle similarity instead
-            bm = bm.unionByName(B.minhash_band_keys_from_tokens(st.toks))
-            # cap_block_sizes reads its input twice (skew-safe sizes agg +
-            # anti-join probe); persist the uncapped map so the explode-
-            # heavy predicate/canopy/band plan above is evaluated ONCE
-            # (measured 2x the whole blocking stage otherwise). Narrow
-            # (block_key, record_id) rows — cheap to hold; released with
-            # the token stats once downstream is materialized.
-            bm = bm.persist()
-            self._held_frames.append(bm)
-            return B.cap_block_sizes(bm, self.max_block_size)
+    def _blocking_map_plan(self, records: DataFrame) -> DataFrame:
+        """The blocking_map stage body: predicate keys, tf-idf canopy keys
+        and minhash band keys of ``records``, block-capped."""
+        bm = B.build_blocking_map(records, self.predicates)
+        st = self._token_stats(records)
+        bm = bm.unionByName(B.tfidf_canopy_keys_from_vocab(st.vocab, st.n_docs, "conv_text", top_m=4))
+        # recall backstop: hard-noised members can lose first-turn
+        # tokens entirely, defeating prefix/token predicates, and
+        # canopy keys of common tokens die at the block cap; minhash
+        # bands key on whole-text word-shingle similarity instead
+        bm = bm.unionByName(B.minhash_band_keys_from_tokens(st.toks))
+        # cap_block_sizes reads its input twice (skew-safe sizes agg +
+        # anti-join probe); persist the uncapped map so the explode-
+        # heavy predicate/canopy/band plan above is evaluated ONCE
+        # (measured 2x the whole blocking stage otherwise). Narrow
+        # (block_key, record_id) rows; blocking_map frees them once its
+        # stage is materialized.
+        bm = bm.persist()
+        self._held_frames.append(bm)
+        return B.cap_block_sizes(bm, self.max_block_size)
 
+    def blocking_map(self, records: DataFrame) -> DataFrame:
         params = {
             "preds": [p.pid for p in self.predicates],
             "cap": self.max_block_size,
             "upstream": self._upstream("records"),
         }
-        fresh = self.catalog is None or not self.catalog.has_stage("blocking_map", params)
-        bm = self._stage("blocking_map", params, thunk)
-        if self.catalog is not None:
-            # the stage write materialized the capped map to the warehouse;
-            # nothing downstream reads the uncapped persist — free it now
-            # (the no-catalog path keeps it until release_token_stats(),
-            # since the returned plan still references it lazily)
-            for df in self._held_frames:
-                df.unpersist()
-            self._held_frames = []
-        if self.catalog is not None and fresh:
+        fresh = self.catalog is not None and not self.catalog.has_stage("blocking_map", params)
+        bm = self._stage("blocking_map", params, lambda: self._blocking_map_plan(records))
+        # materialized: no later stage reads the uncapped map or the tf frames
+        for df in self._held_frames:
+            df.unpersist()
+        self._held_frames = []
+        if fresh:
             # per-predicate blocking report into the metrics table on every
             # BUILD (not resume): the numbers a user reads to catch a
             # predicate going quadratic at 100 TB before the candidate
@@ -290,7 +291,7 @@ class SparkDedupe:
         """``records``' own hydration payload (``conv_id`` plus every
         :meth:`hydration_fields` entry), its tf-idf arrays ranked over the
         memoized :meth:`_token_stats` of ``records``: the slim frame both
-        hydration sides read, and SparkGazetteer's ``gazetteer_slim``."""
+        hydration sides read."""
         vecs_by_col = {}
         for v in self.model.variables:
             if v.kind == "text":
@@ -397,8 +398,6 @@ class SparkDedupe:
         then pick the F-beta-optimal decision threshold from the labeled
         score distribution (≙ gazetteer.threshold, recall_weight semantics,
         gazetteer_example/gazetteer_postgres_example.py:303)."""
-        import numpy as np
-
         from sparklink.score import select_threshold
 
         pairs = labeled_pairs.select(F.col("conv_id_a").alias("id_a"), F.col("conv_id_b").alias("id_b"), "label")
@@ -546,19 +545,16 @@ class SparkDedupe:
 
     def partition(self, transcripts: DataFrame) -> DataFrame:
         """The fused pipeline (≙ deduper.partition(data, 0.5),
-        csv_example/csv_example.py:152) -> entity_map DataFrame."""
+        csv_example/csv_example.py:152) -> entity_map DataFrame. Every stage
+        is materialized (_stage): each candidate pair is scored once, and the
+        map carries no upstream lineage."""
         records = self.canonical_records(transcripts)
         bm = self.blocking_map(records)
         scored = self.scored_pairs(records, bm)
-        if self.catalog is not None:
-            # the scored_pairs stage write materialized the frame -> the
-            # token-stats cache has no remaining consumers
-            self.release_token_stats()
+        self.release_token_stats()
         ckpt_dir = None
         on_oversized = None
         if self.catalog is not None:
-            import os
-
             ckpt_dir = os.path.join(self.catalog.warehouse, "_cc_checkpoints")
             cat = self.catalog
             on_oversized = lambda k, mx: cat.log_metric(  # noqa: E731
@@ -601,7 +597,9 @@ class SparkDedupe:
         the gazetteer index over ``existing_records`` (one blocking pass
         and one tokenization of the whole existing corpus per batch); with
         one the index tables are staged in the child warehouse, keyed on
-        the existing records, and later calls resume them.
+        the existing records, and later calls resume them. The gazetteer
+        matches and the unmatched slice are stages of the in-batch
+        SparkDedupe, like the stages of its pipeline.
 
         Three-way split: (1) new records whose best gazetteer match in the
         existing corpus clears the threshold inherit that record's
@@ -645,8 +643,6 @@ class SparkDedupe:
         child = None
         base_params: dict = {}
         if self.catalog is not None:
-            import os
-
             child = Catalog(
                 self.catalog.spark,
                 os.path.join(self.catalog.warehouse, "match_new_batch"),
@@ -664,35 +660,6 @@ class SparkDedupe:
                 "close_chains": close_chains,
             }
         gaz.index(existing_records, catalog=child)
-
-        def _boundary(name: str, thunk):
-            """TRUNCATE lineage at a pipeline-composition boundary: the
-            gazetteer-match subtree is referenced by the assigned branch
-            AND — via the anti-join — by every self-reference of the
-            in-batch pipeline (hydrate x2, tf-idf, CC edges, confidence
-            joins). persist() caches rows but keeps the full logical plan,
-            so those references duplicate the whole subtree and the
-            analyzed plan grows combinatorially — Catalyst plan
-            canonicalization alone was measured burning minutes of driver
-            CPU on a 5-record batch (PLANS.md). With a catalog the
-            boundary is a STAGE (table write + fresh scan): durable,
-            resumable, and executor-loss-tolerant, where the catalog-less
-            fallback's localCheckpoint blocks are executor-local and die
-            with a lost executor mid-job."""
-            if child is not None:
-                return child.stage(name, {**base_params, "stage": name}, thunk)
-            return thunk().localCheckpoint(eager=True)
-
-        matches = _boundary("gazetteer_matches", lambda: gaz.match(new_records))
-        em = entity_map_existing.select(F.col("record_id").alias("canonical_id"), "canon_id")
-        # LEFT join: a match whose canonical record is missing from the
-        # supplied entity map (the CLI accepts --entity-map and
-        # --transcripts-existing independently) must fall back into the
-        # in-batch pool, not vanish from the delta (r3 ADVICE)
-        matched = matches.join(em, "canonical_id", "left")
-        assigned = matched.filter(F.col("canon_id").isNotNull()).select(
-            F.col("messy_id").alias("record_id"), "canon_id", F.col("score").alias("cluster_score")
-        )
         batch = SparkDedupe(
             model=self.model,
             predicates=self.predicates,
@@ -702,12 +669,30 @@ class SparkDedupe:
             max_component=self.max_component,
             catalog=child,
         )
+        # read by the assigned branch and, via the anti-join, the in-batch
+        # pipeline: staged, so neither re-runs the match (PLANS.md)
+        matches = batch._stage(
+            "gazetteer_matches", {**base_params, "stage": "gazetteer_matches"}, lambda: gaz.match(new_records)
+        )
+        em = entity_map_existing.select(F.col("record_id").alias("canonical_id"), "canon_id")
+        # LEFT join: a match whose canonical record is missing from the
+        # supplied entity map (the CLI accepts --entity-map and
+        # --transcripts-existing independently) must fall back into the
+        # in-batch pool, not vanish from the delta (r3 ADVICE)
+        matched = matches.join(em, "canonical_id", "left")
+        assigned = matched.filter(F.col("canon_id").isNotNull()).select(
+            F.col("messy_id").alias("record_id"), "canon_id", F.col("score").alias("cluster_score")
+        )
         if not close_chains:
             resolved = matched.filter(F.col("canon_id").isNotNull()).select(
                 F.col("messy_id").alias("conv_id")
             )
             unmatched_ids = new_records.join(resolved, "conv_id", "left_anti").select("conv_id")
-            sub = _boundary("unmatched_new", lambda: transcripts_new.join(unmatched_ids, "conv_id"))
+            sub = batch._stage(
+                "unmatched_new",
+                {**base_params, "stage": "unmatched_new"},
+                lambda: transcripts_new.join(unmatched_ids, "conv_id"),
+            )
             em_batch = batch.partition(sub)
             gaz.unindex()
             return assigned.unionByName(em_batch)

@@ -770,34 +770,6 @@ def test_score_hydrated_equals_scored_pairs(spark, fixture_dfs, tmp_path):
     assert union == full
 
 
-def test_blocking_map_persists_uncapped_input_once_and_releases(fixture_dfs):
-    """cap_block_sizes reads its input twice (sizes agg + anti-join probe);
-    pipeline.blocking_map must persist the explode-heavy uncapped map so
-    the upstream plan is evaluated once (measured 2x the blocking stage
-    otherwise), and release_token_stats must free it."""
-    import json as _json
-
-    from sparklink.pipeline import SparkDedupe
-    from sparklink.score import FieldModel
-
-    transcripts, _, _ = fixture_dfs
-    art = _json.load(open("models/transcript_model.json"))
-    dd = SparkDedupe(model=FieldModel.from_json(_json.dumps(art)), threshold=float(art["threshold"]))
-    records = dd.canonical_records(transcripts)
-    bm = dd.blocking_map(records)
-    # r6: the held set is the uncapped map plus the (record,token) tf frame
-    # the vocab build reads twice — every held frame is cached, and
-    # release_token_stats frees them all
-    held = list(dd._held_frames)
-    assert len(held) >= 1 and all(h.is_cached for h in held)
-    n = bm.count()
-    assert n > 0
-    dd.release_token_stats()
-    assert dd._held_frames == [] and not any(h.is_cached for h in held)
-    # the returned (capped) map still computes correctly after release
-    assert bm.count() == n
-
-
 # ---------------------------------------------------------------------------
 # Staged-boundary parity for the dedup/ANN plan-library ops: their plans
 # read the signature/bucket frame three times (size agg + anti-join probe
