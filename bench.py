@@ -495,6 +495,7 @@ def _score_prep_dir(entities: int) -> str:
 
 def main_score_prep() -> None:
     """Materialize canonical records + blocking map for the scoring legs."""
+    from sparklink.canonicalize import canonicalize
     from sparklink.pipeline import SparkDedupe, default_transcript_predicates
 
     spark = _get_spark(f"local[{CPUS}]")
@@ -512,10 +513,11 @@ def main_score_prep() -> None:
     model, threshold = load_static_model()
     dd = SparkDedupe(model=model, predicates=default_transcript_predicates(), threshold=threshold)
     transcripts = spark.read.parquet(f"{fixture}/transcripts.parquet")
-    records = dd.canonical_records(transcripts)
-    records.write.mode("overwrite").parquet(f"{out}/records.parquet")
+    # the stage bodies, not the stages: a stage would materialize its rows
+    # once more before the parquet write
+    canonicalize(transcripts).write.mode("overwrite").parquet(f"{out}/records.parquet")
     records = spark.read.parquet(f"{out}/records.parquet")
-    dd.blocking_map(records).write.mode("overwrite").parquet(f"{out}/blocking_map.parquet")
+    dd._blocking_map_plan(records).write.mode("overwrite").parquet(f"{out}/blocking_map.parquet")
     open(f"{out}/_DONE", "w").write("ok")
     # ALSO stage the hydrated pair frame, hash-partitioned into the 4
     # slices the N-vs-4N executor mode scores (each executor reads ONLY
@@ -675,7 +677,7 @@ def main_score_once(cpus: str) -> None:
         dd_warm = SparkDedupe(
             model=model, predicates=default_transcript_predicates(), threshold=threshold
         )
-        _materialize(dd_warm.scored_pairs(records, bm, pair_slice=pair_slice))
+        _materialize(dd_warm.score_hydrated(dd_warm.hydrated_pairs(records, bm, pair_slice=pair_slice)))
         dd_warm.release_token_stats()
     # multi-JVM executor-scaling barrier: after boot+warm, wait for the
     # agreed epoch so all concurrent executors' MEASURED windows start
@@ -692,7 +694,7 @@ def main_score_once(cpus: str) -> None:
     want_threads = os.environ.get("SPARK_GRAFT_CPU_THREADS") == "1"
     th0 = _jvm_thread_groups() if want_threads else {}
     t0 = time.time()
-    n = _materialize(dd.scored_pairs(records, bm, pair_slice=pair_slice))
+    n = _materialize(dd.score_hydrated(dd.hydrated_pairs(records, bm, pair_slice=pair_slice)))
     dt = time.time() - t0
     cpu = _tree_cpu_seconds(os.getpid()) - cpu0
     bd1 = _tree_cpu_breakdown(os.getpid())

@@ -69,7 +69,8 @@ def cmd_dedupe(args) -> None:
     dd = SparkDedupe(model=model, catalog=Catalog(spark, args.warehouse) if args.warehouse else None)
     _set_threshold(dd, threshold)
     transcripts = spark.read.parquet(args.transcripts)
-    records = dd.canonical_records(transcripts)
+    # only fit and the CSV sink read the records; partition stages its own
+    records = dd.canonical_records(transcripts) if model.weights is None or args.csv_out else None
     if model.weights is None:
         assert args.labeled, "untrained model needs --labeled pairs"
         dd.fit(records, spark.read.parquet(args.labeled))

@@ -54,6 +54,9 @@ def test_blocking_map_frees_uncapped_input_in_both_modes(fixture_dfs, tmp_path, 
 
     def spy_plan(self, records):
         out = plan(self, records)
+        # the stage body persists the uncapped map (and tf) so the capped
+        # map's two reads evaluate the explode-heavy plan once
+        assert self._held_frames and all(h.is_cached for h in self._held_frames)
         held.extend(self._held_frames)
         return out
 
